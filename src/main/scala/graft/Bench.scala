@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query steady-state seconds.
   *
-  * Each query runs twice and reports the faster run: the first execution
-  * of a plan in a fresh JVM pays whole-stage-codegen compilation and C2
-  * JIT (observed 10-30× inflation on this workload), which measures the
-  * JVM, not the engine. A real deployment runs warm.
+  * Each query runs three times (five when a run is under 0.3 s) and
+  * reports the fastest run: the first execution of a plan in a fresh
+  * JVM pays whole-stage-codegen compilation and C2 JIT (observed 10-30×
+  * inflation on this workload), which measures the JVM, not the
+  * engine. A real deployment runs warm.
   *
   * All queries share one JVM/session, so inter-query hygiene matters:
   * round 1 showed 10-40× inflation on late queries (212.9s for a query

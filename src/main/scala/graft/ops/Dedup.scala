@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   /** Chunk granularity for sub-document dedup — single source of truth
-    * for the batch operator, its SQL mirror, and the streaming twin. */
+    * for the batch operator and its SQL mirror. */
   val ChunkTokens = 16
 
   /** Consecutive `chunkTokens`-token chunks per doc: (doc_id, pos,
@@ -23,10 +23,8 @@ object Dedup {
     * pos < 2²⁰ (docs beyond 16M tokens, negative ids, or an id space
     * past 8.8·10¹² would silently wrap and corrupt winner selection),
     * and an out-of-range row raises instead of wrapping. The chunking
-    * itself is scan-stage (sequence + slice + posexplode); shared by
-    * `corpus_chunk_dedup` and
-    * [[graft.streaming.CorpusStream.chunkDedupBatch]] so the batch
-    * and streaming forms can never chunk differently.
+    * itself is scan-stage (sequence + slice + posexplode); used by
+    * `corpus_chunk_dedup`.
     */
   def tokenChunks(docs: DataFrame, textCol: Column, idCol: Column,
       chunkTokens: Int = ChunkTokens): DataFrame =
@@ -139,50 +137,6 @@ object Dedup {
       min((col("d") * lit(a) + lit(b)) % lit(P)).as(s"mh$h")
     }
     hashed.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-  }
-
-  /** Per-ROW banded signature: the same (band, bk) keys as
-    * [[minhashBandKeys]], computed with higher-order functions over the
-    * doc's own shingle array — no explode, no keyed aggregation, no
-    * shuffle. This is the streaming form (a stateful dedup can't put a
-    * blocking aggregation in front of its state update) and also the
-    * cheapest shape whenever the whole document is already in hand on
-    * one row. Equivalence with the aggregated form is property-tested.
-    *
-    * Returns array<struct<band:int, bk:string>>; empty array when the
-    * doc has fewer than `shingleN` tokens (such docs have no signature
-    * and can never collide — same contract as the aggregated form,
-    * where they produce no shingle rows).
-    */
-  def bandKeyArray(textCol: Column, shingleN: Int = 3, bands: Int = 8,
-                   rowsPerBand: Int = 4): Column = {
-    val numHashes = bands * rowsPerBand
-    val tk = Text.tokens(textCol)
-    val sh = array_distinct(when(size(tk) >= shingleN,
-        transform(sequence(lit(1), size(tk) - (shingleN - 1)),
-          i => concat_ws(" ", (0 until shingleN).map(o => element_at(tk, i + lit(o))): _*)))
-      .otherwise(array().cast("array<string>")))
-    // ONE pass over the shingle hashes with a numHashes-wide min
-    // accumulator: a naive `numHashes × array_min(transform(...))`
-    // spelling re-evaluates the whole shingle+hash subtree per hash
-    // function (expression CSE does not share across the outer
-    // array functions) — measured ~9× slower.
-    val consts = array((0 until numHashes).map { h =>
-      val (a, b) = hashConsts(h)
-      struct(lit(a).as("a"), lit(b).as("b"))
-    }: _*)
-    val mins = aggregate(
-      transform(sh, s => Text.polyHash(s)),
-      array_repeat(lit(P), numHashes),
-      (acc, x) => zip_with(acc, consts,
-        (m, c) => least(m, (x * c.getField("a") + c.getField("b")) % lit(P))))
-    val bandStructs = (0 until bands).map { b =>
-      val ms = (0 until rowsPerBand)
-        .map(r => element_at(mins, b * rowsPerBand + r + 1).cast("string"))
-      struct(lit(b).as("band"), concat_ws("|", ms: _*).as("bk"))
-    }
-    when(size(sh) > 0, array(bandStructs: _*))
-      .otherwise(array().cast("array<struct<band:int,bk:string>>"))
   }
 
   /** DuckDB mirror of [[minhashBandKeys]]: CTEs `hsh`, `sig`, `band`
@@ -402,10 +356,11 @@ object Dedup {
     val sh = if (persistShingles && shingles.isEmpty)
       base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else base
-    // Signatures use the aggregated form, NOT [[bandKeyArray]]: the
-    // per-row expression re-evaluates inside the pair self-join and
-    // measured ~9× slower than paying the one |shingles|-keyed
-    // exchange (which ReuseExchange shares with the verify side).
+    // Signatures use the aggregated form, not a per-row higher-order
+    // expression over each doc's shingle array: that re-evaluates
+    // inside the pair self-join and measured ~9× slower than paying
+    // the one |shingles|-keyed exchange (which ReuseExchange shares
+    // with the verify side).
     jaccardVerify(
       lshCandidates(minhashBandKeys(sh, bands, rowsPerBand), maxBucket),
       sh, num, den)

@@ -46,11 +46,8 @@ object Pq {
 
   /** One flat ADC inner-product table per query — RAW query slices ×
     * the (sub, code, centroid) codebook, sorted to the positional
-    * (sub·k + code) layout `adc_sum` indexes into. Shared by
-    * [[IvfPq.topK]] and the streaming store probe
-    * ([[graft.streaming.CorpusStream.annProbeStorePq]]) so the table
-    * layout can never drift between the batch and streaming read
-    * paths. */
+    * (sub·k + code) layout `adc_sum` indexes into. Used by
+    * [[IvfPq.topK]]. */
   private[graft] def adcTables(queries: DataFrame, vecCol: Column,
       idCol: Column, cents: DataFrame, m: Int, dsub: Int): DataFrame = {
     val ip = expr(
@@ -100,7 +97,7 @@ object Pq {
     import spark.implicits._
     val dsub = dim / m
     // id cast to long up front: seedIds reads getLong, and callers may
-    // pass int ids (capBySource precedent)
+    // pass int ids
     val base = corpus.select(idCol.cast("long").as("vec_id"), vecCol.as("v"))
     // deterministic id-hash sampling, NOT Bernoulli sample(): the
     // training set must be identical under any partitioning/AQE

@@ -37,16 +37,27 @@ object Sinks {
       finally walk.close()
     }
 
+  private def oldOf(target: Path): Path = Paths.get(target.toString + ".old")
+
   /** Atomic dir swap: write-new → move-old-away → rename — crash-safe
-    * enough for a single writer (streaming guarantees one foreachBatch
-    * at a time per query). */
+    * for a single writer (streaming guarantees one foreachBatch at a
+    * time per query) once [[recoverSwap]] runs on open. */
   private def swapInto(target: Path, freshlyWritten: Path): Unit = {
-    val old = Paths.get(target.toString + ".old")
+    val old = oldOf(target)
     deleteRecursive(old)
     if (Files.exists(target)) Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(freshlyWritten, target, StandardCopyOption.ATOMIC_MOVE)
     deleteRecursive(old)
   }
+
+  /** Undo a [[swapInto]] cut between its two moves: that crash leaves
+    * `target.old` (the last committed state) and no `target`. Run
+    * before anything reads or swaps `target` — reading would see an
+    * empty destination, and the next swap deletes `.old`, the only
+    * copy. */
+  private[graft] def recoverSwap(target: Path): Unit =
+    if (!Files.exists(target) && Files.exists(oldOf(target)))
+      Files.move(oldOf(target), target, StandardCopyOption.ATOMIC_MOVE)
 
   /** D1 (simple form): one parquet dir, rewritten whole every merge.
     * Fine at fixture scale; see [[BucketedSnapshotStore]] for the form
@@ -59,6 +70,7 @@ object Sinks {
     // remembered after the first write: lets load() skip the parquet
     // footer-inference job — measurable on a sub-second latency budget
     @volatile private var schema: Option[org.apache.spark.sql.types.StructType] = None
+    recoverSwap(p)
 
     def exists: Boolean = Files.exists(p)
 
@@ -139,6 +151,7 @@ object Sinks {
       * every bucket once. */
     @volatile private var staleSinceTotals: Set[Int] = Set.empty
     @volatile private var partialsKnownFresh: Boolean = false
+    (0 until numBuckets).foreach(b => { recoverSwap(bucketDir(b)); recoverSwap(partDir(b)) })
 
     def exists: Boolean = Files.exists(root) && existingBuckets.nonEmpty
 
@@ -222,7 +235,8 @@ object Sinks {
 
     /** One partitioned write of `df` (which holds only `touched`
       * buckets' rows), then per-bucket atomic swap. A touched bucket
-      * with no surviving rows (all keys deleted) is removed. */
+      * with no surviving rows (all keys deleted) is removed, together
+      * with any `.old` copy that [[recoverSwap]] would bring back. */
     private def writePartitioned(df: DataFrame, target: Path, touched: Seq[Int]): Unit = {
       val tmp = Paths.get(target.toString + ".tmp")
       deleteRecursive(tmp)
@@ -232,7 +246,7 @@ object Sinks {
         val fresh = tmp.resolve(s"_b=$b")
         val dest = target.resolve(s"b=$b")
         if (Files.exists(fresh)) swapInto(dest, fresh)
-        else deleteRecursive(dest)
+        else { deleteRecursive(oldOf(dest)); deleteRecursive(dest) }
       }
       deleteRecursive(tmp)
     }

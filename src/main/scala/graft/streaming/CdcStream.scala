@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.cdc.{CdcWire, Routing}
-import graft.sinks.Sinks.SnapshotStore
+import graft.sinks.Sinks.{SnapshotStore, recoverSwap}
 
 /** The streaming assembly (SURVEY §3.2 restated for Spark; the
   * foreachBatch/incremental-execution model follows "Structured
@@ -54,7 +54,10 @@ object CdcStream {
 
   def start(wire: DataFrame, store: SnapshotStore, dlqPath: String,
             checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
-            totalsPath: Option[String] = None): StreamingQuery =
+            totalsPath: Option[String] = None): StreamingQuery = {
+    // the stores recover their own dirs on open; the totals dir is the
+    // pipeline's
+    totalsPath.foreach(tp => recoverSwap(java.nio.file.Paths.get(tp)))
     wire.observe(MetricsName, count(lit(1)).as("n_wire"))
       .writeStream
       .trigger(trigger)
@@ -63,6 +66,7 @@ object CdcStream {
         applyBatch(batch, store, dlqPath, totalsPath, batchId)
       }
       .start()
+  }
 
   /** One micro-batch: decode, split, route. Factored out so batch
     * replays and tests hit the identical code path.

@@ -2,10 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
-import graft.sinks.Sinks.BucketedSnapshotStore
+import graft.sinks.Sinks.{BucketedSnapshotStore, ParquetSnapshotStore, SnapshotStore}
 
 /** BucketedSnapshotStore: merge correctness, touched-bucket-only
-  * rewrites, whole-bucket deletion, and incremental D2 totals. */
+  * rewrites, whole-bucket deletion, and incremental D2 totals; plus
+  * recovery on open from a crash inside a dir swap, for both stores. */
 class BucketedStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -127,5 +128,56 @@ class BucketedStoreSpec extends SparkSpec {
     val want = s.load().get.select("emp_id", "emp_city", "ts").as[(Int, String, Long)]
       .collect().toSet
     assert(got === want)
+  }
+
+  private val crashBatches = Seq(
+    batch((1 to 12).map(i => (i, s"c${i % 3}", i.toLong, "insert")): _*),
+    batch((1, "c9", 50L, "update"), (2, "c0", 50L, "delete"), (13, "c1", 50L, "insert")))
+
+  /** Snapshot rows and totals after every batch merges with totals
+    * written; `crash` runs between the two batches and returns the
+    * store that merges the second one. */
+  private def runBatches(open: String => SnapshotStore, path: String)(
+      crash: SnapshotStore => SnapshotStore): (Set[(Int, String, Long)], Map[String, (Long, Long)]) = {
+    val totals = path + "_totals"
+    val first = open(path)
+    first.merge(crashBatches(0), "ts")
+    first.writeTotals(totals, "emp_city", "ts")
+    val second = crash(first)
+    second.merge(crashBatches(1), "ts")
+    second.writeTotals(totals, "emp_city", "ts")
+    (second.load().get.select("emp_id", "emp_city", "ts").as[(Int, String, Long)].collect().toSet,
+      spark.read.parquet(totals).select("emp_city", "total_salary", "n_emps")
+        .as[(String, Long, Long)].collect().map { case (k, s, n) => k -> (s, n) }.toMap)
+  }
+
+  /** The state a crash between swapInto's two moves leaves behind. */
+  private def cutSwap(target: Path): Unit =
+    Files.move(target, Paths.get(target.toString + ".old"))
+
+  test("simple store: a crash inside the snapshot swap recovers on open") {
+    val open = (p: String) => new ParquetSnapshotStore(spark, p, Seq("emp_id"))
+    val want = runBatches(open, tmpdir())(identity)
+    val path = tmpdir()
+    val got = runBatches(open, path) { _ =>
+      cutSwap(Paths.get(path))
+      open(path)
+    }
+    assert(got === want)
+    assert(!Files.exists(Paths.get(path + ".old")))
+  }
+
+  test("bucketed store: a crash inside a bucket and partials swap recovers on open") {
+    val open = (p: String) => new BucketedSnapshotStore(spark, p, Seq("emp_id"), numBuckets = 4)
+    val want = runBatches(open, tmpdir())(identity)
+    val path = tmpdir()
+    val cut = "b=0" // cutSwap throws if the first batch left it empty
+    val got = runBatches(open, path) { _ =>
+      cutSwap(Paths.get(path, cut))
+      cutSwap(Paths.get(path + "_parts", cut))
+      open(path)
+    }
+    assert(got === want)
+    assert(!Files.exists(Paths.get(path, cut + ".old")))
   }
 }

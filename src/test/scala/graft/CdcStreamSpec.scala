@@ -95,11 +95,15 @@ class CdcStreamSpec extends SparkSpec {
       Files.write(java.nio.file.Paths.get(s"$wireDir/$name"),
         String.join("\n", lines: _*).getBytes)
     }
+    val totals = java.nio.file.Paths.get(s"$root/totals")
     def run(): Unit = {
       val wire = graft.sources.CdcSources.wireJsonStream(spark, wireDir, maxFilesPerTrigger = 1)
-      val q = CdcStream.start(wire, store, s"$root/dlq", s"$root/ckpt")
+      val q = CdcStream.start(wire, store, s"$root/dlq", s"$root/ckpt",
+        totalsPath = Some(totals.toString))
       q.awaitTermination(120000)
     }
+    def totalSalary(): Long =
+      spark.read.parquet(totals.toString).select("total_salary").as[Long].collect().sum
 
     writeWire(Seq(
       CdcEvent(0, 1L, "Ann", "A", "2012-01-01", "SF", 50000L, "insert", ts(1)),
@@ -117,6 +121,14 @@ class CdcStreamSpec extends SparkSpec {
     assert(snap === Map(1L -> 60000L))
     // b1's invalid row was NOT replayed: still exactly one DLQ record
     assert(spark.read.parquet(s"$root/dlq").count() === 1)
+    assert(totalSalary() === 60000L)
+
+    // the state a totals swap cut between its two moves leaves: only
+    // totals.old. Opening the stream restores it, even with nothing to
+    // process
+    Files.move(totals, java.nio.file.Paths.get(s"$totals.old"))
+    run()
+    assert(totalSalary() === 60000L)
   }
 
   test("corrupt wire messages are quarantined, not dropped") {

@@ -42,71 +42,4 @@ class PartitionPruneSpec extends SparkSpec {
       s"scan must read 1 of $nDays partitions, read ${scan.metrics("numFiles").value}")
   }
 
-  test("PQ ANN store probe prunes unprobed cells at the directory level") {
-    // the IVF inverted-list property realized as parquet partition
-    // pruning: a probe touching nProbe cells must leave every other
-    // cell's files ON DISK — both in the ADC shortlist scan and the
-    // exact re-rank scan
-    import graft.streaming.CorpusStream
-    import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("graft-pqprune").toString
-    val rnd = new scala.util.Random(4242)
-    def vec(shift: Int): Seq[Float] =
-      Seq.tabulate(8)(j => (rnd.nextFloat() - 0.5f) * 2f +
-        (if (j == shift % 4) 3f else 0f))
-    val cents = (0 until 4).map(c => Seq.tabulate(8)(j => if (j == c) 3f else 0f))
-    val rows = (1L to 40L).map(i => (i, vec(i.toInt)))
-    val codebook = graft.ops.Pq.build(rows.toDF("vec_id", "v"),
-        col("v"), col("vec_id"), dim = 8, m = 4, k = 4)
-      .cents.as[(Int, Int, Seq[Double])].collect().toSeq
-    CorpusStream.annIndexBatchPq(store, cents, codebook)(
-      rows.take(20).toDF("vec_id", "v"), 0L)
-    CorpusStream.annIndexBatchPq(store, cents, codebook)(
-      rows.drop(20).toDF("vec_id", "v"), 1L)
-    val nCellsOnDisk = spark.read.parquet(store)
-      .select($"cell").distinct().count()
-    assert(nCellsOnDisk == 4, "fixture must populate all 4 cells")
-
-    val probe = CorpusStream.annProbeStorePq(spark, store, cents, codebook,
-      Seq((100L, vec(2))).toDF("vec_id", "v"), k = 3, nProbe = 1,
-      shortlist = 10)
-    assert(probe.collect().nonEmpty)
-    // unlike the exchange-free query above, the probe plan has joins,
-    // so AQE wraps subtrees in QueryStageExec nodes whose inner plan
-    // is NOT in `children` — descend explicitly
-    def allScans(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] = {
-      val here = p match {
-        case f: FileSourceScanExec => Seq(f)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          allScans(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          allScans(q.plan)
-        case _ => Seq.empty
-      }
-      here ++ p.children.flatMap(allScans)
-    }
-    val scans = allScans(probe.queryExecution.executedPlan)
-      .filter(_.metadata.get("Location").exists(_.contains("graft-pqprune")))
-    assert(scans.nonEmpty, "no store scans found in the probe plan")
-    // file counts measured from DISK, not assumed: the shuffle width
-    // decides how many part-files each (batch, cell) dir holds
-    def partFiles(p: java.io.File): Seq[java.io.File] =
-      if (p.isDirectory) p.listFiles().toSeq.flatMap(partFiles)
-      else if (p.getName.endsWith(".parquet")) Seq(p) else Seq.empty
-    val byCell = partFiles(new java.io.File(store))
-      .groupBy(_.getParentFile.getName) // cell=N
-    val totalFiles = byCell.values.map(_.size).sum
-    val maxCellFiles = byCell.values.map(_.size).max
-    assert(byCell.size == 4 && totalFiles > maxCellFiles,
-      s"fixture must spread files across cells (got $byCell)")
-    for (scan <- scans) {
-      assert(scan.metadata("PartitionFilters").contains("cell"),
-        "the probed-cell set must become a PARTITION filter on the store")
-      // nProbe = 1 → at most ONE cell's files are read, however many
-      // part-files the shuffle put there
-      assert(scan.metrics("numFiles").value <= maxCellFiles.toLong,
-        s"scan must read at most one cell's $maxCellFiles files, " +
-          s"read ${scan.metrics("numFiles").value} of $totalFiles")
-    }
-  }
 }
