@@ -1,552 +1,65 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types._
 
-/** One output row of [[Monitors.cusumMonitor]]: the running one-sided
-  * CUSUM statistics and alarm flags after folding `day`'s count. */
-case class CusumPoint(key: String, day: java.sql.Date, n: Long, dev_x100: Long,
-    cusum_pos: Long, cusum_neg: Long, alarm_hi: Boolean, alarm_lo: Boolean)
-
-/** One surviving counter of [[Monitors.heavyHittersByGroup]] after a
-  * micro-batch: `est_count ∈ [true − max_err, true]`, where `max_err`
-  * is the group's exact decrement total (≤ n_processed/(k+1)). */
-case class HeavyHitter(group: String, item: String, est_count: Long,
-    max_err: Long, n_processed: Long)
-
-/** One credited purchase of [[Monitors.attributionMonitor]]: the
-  * purchase event plus the touch channel it credits (`"direct"` when
-  * no touch preceded it) and its revenue in exact cents. */
-case class AttributionPoint(user_id: Long, ts: java.sql.Timestamp,
-    event_id: Long, touch_type: String, value_x100: Long)
-
-/** One key's quantile summary state after a micro-batch of
-  * [[Monitors.gkQuantileMonitor]]: each pN_x100 estimate's TRUE rank
-  * is within `eps_n` (= ⌊εn⌋) of its target rank — the GK guarantee,
-  * emitted as an explicit certificate like [[HeavyHitter.max_err]]. */
-case class QuantilePoint(key: String, n: Long, p50_x100: Long,
-    p90_x100: Long, p99_x100: Long, eps_n: Long, summary_size: Int)
-
-/** One key's distribution reading from
-  * [[Monitors.histogramDriftMonitor]] after a micro-batch: L1 distance
-  * (in basis points, = 2 × total-variation distance) between the live
-  * bin shares and the reference histogram, plus the worst bin. */
-case class DriftPoint(key: String, n: Long, drift_l1_bp: Long,
-    worst_bin: Long, worst_drift_bp: Long, alarm: Boolean)
-
-/** Continuous sequential monitors — the streaming twins of the batch
-  * audit queries (`events_cusum` etc.), same family discipline as
-  * [[CorpusStream]]: exact integer state, deterministic under replay,
-  * O(1) state per key.
+/** foreachBatch twins of batch registry queries (`events_adoption_curve`,
+  * `events_retention`, `events_funnel`, `events_approx_distinct`): each
+  * body keeps its state in an external parquet store under
+  * batchId-keyed partitions and rewrites its output so that a
+  * crash-replayed batch replaces its own rows. With day-ordered batches
+  * the accumulated output equals the batch query row for row under any
+  * day-aligned split; the specs named on each body pin that contract.
   */
 object Monitors {
 
-  /** Streaming one-sided CUSUM changepoint monitor (Page, Biometrika
-    * 1954) — the CONTINUOUS form of `events_cusum`. The batch query
-    * scales deviations by the in-hand series (dev = n·D − N, the
-    * retrospective audit); a stream has no final N/D, so the
-    * sequential contract is Page's actual one: deviations against a
-    * FIXED target rate (`dev = 100·n − target_x100` per period,
-    * exact cents-style integers), alarms when either one-sided
-    * accumulation crosses `threshold_x100`. State per key is THREE
-    * longs — running sum S, running min of S, running max of S — and
-    * the one-sided resets ride the same prefix-extrema identity the
-    * batch form uses (`CUSUM⁺ = S − min(0, min S)`), so batch and
-    * stream agree fold-for-fold on identical input order.
-    *
-    * Input contract: one row per (key, day, n) — the CLOSED daily
-    * aggregate (upstream is a watermarked window count; this monitor
-    * folds finalized periods, it does not re-open days). Rows within
-    * a micro-batch fold in day order, so replaying a batch reproduces
-    * identical outputs (the [[CorpusStream]] determinism rule).
-    *
-    * Scale shape: state is O(1) per monitored key, sharded by key;
-    * no timeout needed — an idle key holds 24 bytes forever, and the
-    * alarm history lives in the output stream, not the state.
-    */
-  def cusumMonitor(daily: DataFrame, targetX100: Long,
-      thresholdX100: Long): Dataset[CusumPoint] = {
-    import daily.sparkSession.implicits._
-    daily.select(col("key").cast("string").as("key"),
-        col("day").cast("date").as("day"), col("n").cast("long").as("n"))
-      .as[(String, java.sql.Date, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, rows: Iterator[(String, java.sql.Date, Long)],
-         state: GroupState[(Long, Long, Long)]) => {
-          var (s, minS, maxS) =
-            if (state.exists) state.get else (0L, 0L, 0L)
-          val out = rows.toSeq.sortBy(_._2.toLocalDate.toEpochDay).map {
-            case (_, day, n) =>
-              val dev = 100L * n - targetX100
-              s += dev
-              minS = math.min(minS, s)
-              maxS = math.max(maxS, s)
-              val pos = s - math.min(0L, minS)
-              val neg = math.max(0L, maxS) - s
-              CusumPoint(key, day, n, dev, pos, neg,
-                pos > thresholdX100, neg > thresholdX100)
-          }
-          state.update((s, minS, maxS))
-          out.iterator
-        })
+  /** The store's rows from every batch except `batchId` (a replay must
+    * not see its own earlier write), or an empty frame when nothing
+    * has been written yet. The explicit schema makes a footerless
+    * crashed write read as empty instead of failing inference. */
+  private def prior(storeDir: String, batchId: Long,
+      fields: Seq[StructField])(s: org.apache.spark.sql.SparkSession): DataFrame = {
+    val withBatch = StructType(fields :+ StructField("batch", LongType))
+    try s.read.schema(withBatch).parquet(storeDir)
+      .where(col("batch") =!= batchId)
+      .select(fields.map(f => col(f.name)): _*)
+    catch { case e: Exception with org.apache.spark.SparkThrowable
+      if e.getCondition == "PATH_NOT_FOUND" =>
+        s.createDataFrame(s.sparkContext.emptyRDD[Row], StructType(fields))
+    }
   }
 
-  /** Streaming heavy hitters per group — Misra & Gries' frequent-items
-    * summary (Science of Computer Programming, 1982), the CONTINUOUS
-    * form of `events_heavy_hitters`: at most `k` counters of state per
-    * group, folded across every micro-batch, with the classic
-    * deterministic guarantee that ANY item with true frequency
-    * > n/(k+1) is present in the summary, and every estimate
-    * undercounts by at most the group's decrement total (emitted as
-    * `max_err`, itself ≤ n/(k+1)) — an exact per-state error
-    * certificate, not a probabilistic bound (the batch sketch family's
-    * `within_bound` discipline). After each batch the group's full
-    * surviving counter table re-emits, so the latest batch's rows ARE
-    * the current summary.
-    *
-    * Rows fold in (item) order inside a batch, so replaying a batch
-    * against the same state reproduces identical outputs (the
-    * [[CorpusStream]] determinism rule; Misra–Gries is arrival-order
-    * dependent across DIFFERENT batchings, like any one-pass summary).
-    *
-    * Scale shape: state is ≤ k (item, count) entries + two longs per
-    * group, sharded by group; an idle group holds its bounded summary
-    * forever — the alarm surface, not a leak.
-    */
-  def heavyHittersByGroup(rows: DataFrame, k: Int): Dataset[HeavyHitter] = {
-    require(k >= 1, "k must be at least 1")
-    import rows.sparkSession.implicits._
-    rows.select(col("group").cast("string").as("group"),
-        col("item").cast("string").as("item"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (group: String, it: Iterator[(String, String)],
-         state: GroupState[(Map[String, Long], Long, Long)]) => {
-          var (counters, decr, n) =
-            if (state.exists) state.get else (Map.empty[String, Long], 0L, 0L)
-          it.map(_._2).toSeq.sorted.foreach { item =>
-            n += 1
-            counters.get(item) match {
-              case Some(c) => counters = counters.updated(item, c + 1)
-              case None if counters.size < k =>
-                counters = counters.updated(item, 1L)
-              case None =>
-                decr += 1
-                counters = counters.flatMap { case (i, c) =>
-                  if (c > 1) Some(i -> (c - 1)) else None
-                }
-            }
-          }
-          state.update((counters, decr, n))
-          counters.toSeq.sortBy(_._1).iterator.map { case (item, c) =>
-            HeavyHitter(group, item, c, decr, n)
-          }
-        })
-  }
-
-  private def micros(t: java.sql.Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + (t.getNanos / 1000L) % 1000000L
-
-  /** Streaming LAST-TOUCH ATTRIBUTION — the CONTINUOUS form of
-    * `events_attribution` (the third monitor after CUSUM and
-    * Misra-Gries, same contract): each purchase credits the user's
-    * most recent preceding touch (click / view / signup), `"direct"`
-    * when none preceded. State per user is ONE (touch, ts_micros,
-    * event_id) triple — O(1), the batch window's carry value made
-    * explicit — so replaying the whole log through the monitor equals
-    * the batch query's strictly-preceding-rows `last(ignoreNulls)`
-    * fold row for row on identical input order.
-    *
-    * Rows fold in (ts, event_id) order inside a micro-batch (the
-    * batch window's exact ordering), so replaying a batch against the
-    * same state reproduces identical outputs (the [[CorpusStream]]
-    * determinism rule). Cross-batch the state carries the last touch,
-    * which is all the strictly-preceding frame can see across the
-    * batch boundary — MonitorsSpec pins both halves plus a
-    * checkpointed restart.
-    *
-    * Scale shape: state is three fields per user, sharded by user —
-    * attribution is embarrassingly parallel across users, the same
-    * one-keyed-exchange shape as the batch form; emitted credits live
-    * in the output stream, not the state.
-    */
-  def attributionMonitor(events: DataFrame): Dataset[AttributionPoint] = {
-    import events.sparkSession.implicits._
-    val touches = Set("click", "view", "signup")
-    events.select(col("user_id").cast("long").as("user_id"),
-        col("ts").cast("timestamp").as("ts"),
-        col("event_id").cast("long").as("event_id"),
-        col("event_type").cast("string").as("event_type"),
-        coalesce((col("value").cast("decimal(18,2)") * 100).cast("long"),
-          lit(0L)).as("v"))
-      .as[(Long, java.sql.Timestamp, Long, String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, String, Long)],
-         state: GroupState[(String, Long, Long)]) => {
-          var touch: Option[(String, Long, Long)] =
-            if (state.exists) Some(state.get) else None
-          val out = rows.toSeq.sortBy(r => (micros(r._2), r._3)).flatMap {
-            case (_, ts, eid, typ, v) =>
-              val credit =
-                if (typ == "purchase")
-                  Some(AttributionPoint(user, ts, eid,
-                    touch.map(_._1).getOrElse("direct"), v))
-                else None
-              if (touches(typ)) touch = Some((typ, micros(ts), eid))
-              credit
-          }
-          touch.foreach(state.update)
-          out.iterator
-        })
-  }
-
-  /** Streaming ε-approximate QUANTILES per key — the Greenwald–Khanna
-    * summary (SIGMOD 2001), the CONTINUOUS form of
-    * `events_approx_quantiles` and the fourth monitor of the family
-    * (CUSUM = drift, Misra-Gries = heavy items, attribution = credit,
-    * GK = latency/value percentiles — the observability quartet).
-    * State per key is the GK tuple list ((v, g, Δ) with
-    * rmin = Σg, rmax = rmin + Δ) plus n: O((1/ε)·log(εn)) entries,
-    * never the data. Insert keeps the invariant g + Δ ≤ ⌊2εn⌋; the
-    * compress pass merges neighbors while it preserves that bound, so
-    * every rank query answers within ⌊εn⌋ — emitted per batch as the
-    * `eps_n` certificate next to p50/p90/p99 (exact cents), the same
-    * audit discipline as the batch sketch family's `within_bound`.
-    *
-    * Values fold in sorted order inside a micro-batch, so replaying a
-    * batch against the same state reproduces identical outputs (the
-    * [[CorpusStream]] determinism rule; like any one-pass summary the
-    * result may differ across DIFFERENT batchings, within ε always).
-    * After each batch the key's current estimates re-emit — the
-    * latest row per key IS the monitor reading.
-    *
-    * Scale shape: state is the bounded summary, sharded by key;
-    * map-side the engine already pre-shuffles only (key, value) pairs.
-    * ε defaults to 1 % — 99 summary entries ceiling per log-doubling,
-    * ~KBs per monitored key at any n.
-    */
-  /** Streaming DISTRIBUTION-drift monitor — the fifth of the family
-    * (CUSUM watches the RATE, this watches the SHAPE): live values
-    * accumulate into the same 16 equi-width bins as the batch audit
-    * `events_drift_halves` (bin = min(15, max(v, 0) div 2000) over
-    * exact cents — rule shared verbatim so the batch table is this
-    * monitor's oracle-checked twin), and each micro-batch emits the
-    * key's L1 distance in basis points between live bin shares and a
-    * FIXED reference histogram (the training-corpus distribution a
-    * production drift alarm compares against). L1-in-bp is the
-    * log-free integer form of the PSI/KS comparison the batch twin
-    * documents: exact, engine-stable, and 2× the total-variation
-    * distance, with `worst_bin` naming where the mass moved.
-    *
-    * Replay determinism is STRONGER than the other monitors': bin
-    * counts are order-independent, so the reading is identical under
-    * ANY batching, not just per-batch replay.
-    *
-    * Scale shape: state is 16 longs + n per key, sharded by key; the
-    * reference rides the closure as 16 literals. No timeout — an idle
-    * key holds 136 bytes, and the alarm history lives in the output.
-    *
-    * `refShareBp` = reference share per bin in basis points (need not
-    * sum to exactly 10000; the live side truncates the same way, and
-    * up to 16 bp of truncation slack is far below any useful alarm
-    * threshold). `v` arrives in exact cents.
-    */
-  def histogramDriftMonitor(rows: DataFrame, refShareBp: Seq[Long],
-      alarmL1Bp: Long): Dataset[DriftPoint] = {
-    require(refShareBp.length == 16, "reference histogram must have 16 bins")
-    require(refShareBp.forall(s => s >= 0L && s <= 10000L),
-      "reference shares are basis points in [0, 10000]")
-    import rows.sparkSession.implicits._
-    rows.select(col("key").cast("string").as("key"),
-        col("v").cast("long").as("v"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, it: Iterator[(String, Long)],
-         state: GroupState[Seq[Long]]) => {
-          val bins = (if (state.exists) state.get else Seq.fill(16)(0L)).toArray
-          it.foreach { case (_, v) =>
-            bins(math.min(15L, math.max(v, 0L) / 2000L).toInt) += 1
-          }
-          state.update(bins.toSeq)
-          val n = bins.sum
-          if (n == 0L) Iterator.empty
-          else {
-            val deltas = bins.zip(refShareBp).map { case (b, ref) =>
-              math.abs(10000L * b / n - ref)
-            }
-            val l1 = deltas.sum
-            val worst = deltas.indexOf(deltas.max) // ties → lowest bin
-            Iterator.single(DriftPoint(key, n, l1, worst.toLong,
-              deltas(worst), l1 > alarmL1Bp))
-          }
-        })
-  }
-
-  def gkQuantileMonitor(rows: DataFrame, epsBp: Int = 100): Dataset[QuantilePoint] = {
-    require(epsBp >= 1 && epsBp <= 2500, "eps must be in (0, 0.25] as bp")
-    import rows.sparkSession.implicits._
-    rows.select(col("key").cast("string").as("key"),
-        col("v").cast("long").as("v"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, it: Iterator[(String, Long)],
-         state: GroupState[(Long, Seq[(Long, Long, Long)])]) => {
-          var (n, summary) =
-            if (state.exists) state.get else (0L, Seq.empty[(Long, Long, Long)])
-          var s = summary.toVector
-          def twoEpsN: Long = math.max(1L, (2L * epsBp * n) / 10000L)
-          def insert(v: Long): Unit = {
-            n += 1
-            val i = s.indexWhere(t => v < t._1)
-            val pos = if (i < 0) s.length else i
-            // a new min/max carries Δ = 0 (its rank is exact); an
-            // interior insert carries Δ = ⌊2εn⌋ − 1
-            val delta =
-              if (pos == 0 || pos == s.length) 0L
-              else math.max(0L, twoEpsN - 1L)
-            s = (s.take(pos) :+ ((v, 1L, delta))) ++ s.drop(pos)
-          }
-          // right-to-left pass merging t_i into t_{i+1} while the
-          // merged tuple keeps g + Δ ≤ ⌊2εn⌋; endpoints never merge
-          def compress(): Unit = if (s.size > 2) {
-            val bound = twoEpsN
-            val out = scala.collection.mutable.ArrayBuffer(s.last)
-            for (i <- s.size - 2 to 1 by -1) {
-              val t = s(i); val succ = out.head
-              if (t._2 + succ._2 + succ._3 <= bound)
-                out(0) = (succ._1, t._2 + succ._2, succ._3)
-              else out.prepend(t)
-            }
-            out.prepend(s.head)
-            s = out.toVector
-          }
-          it.map(_._2).toSeq.sorted.foreach { v =>
-            insert(v)
-            if (s.size % 64 == 0) compress()
-          }
-          compress()
-          state.update((n, s))
-          // rank lookup: first tuple whose rmax = rmin + Δ overshoots
-          // r + εn ends the scan; its predecessor's value answers
-          // within ⌊εn⌋ of the target rank r = ⌈φ·n⌉
-          def q(phiBp: Long): Long =
-            if (s.isEmpty) 0L
-            else {
-              val r = (phiBp * n + 9999L) / 10000L
-              val epsN = (epsBp.toLong * n) / 10000L
-              var rmin = 0L
-              var ans = s.last._1
-              var prev = s.head._1
-              var done = false
-              for (t <- s if !done) {
-                rmin += t._2
-                if (rmin + t._3 > r + epsN) { ans = prev; done = true }
-                prev = t._1
-              }
-              ans
-            }
-          if (n == 0L) Iterator.empty
-          else Iterator.single(QuantilePoint(key, n, q(5000L), q(9000L),
-            q(9900L), (epsBp.toLong * n) / 10000L, s.size))
-        })
-  }
-
-  /** foreachBatch body for STREAMING growth accounting — the
-    * continuous form of `events_growth_accounting`: the presence
-    * store is an external parquet table of (user_id, day) rows under
-    * batchId-keyed partitions (queryable, restart-survivable, shared
-    * with batch backfills — the [[CorpusStream.dedupBatch]] store
-    * discipline verbatim), and each micro-batch (re)emits the daily
-    * new / returning / resurrected / churned decomposition for
-    * exactly the days it carries, classified against EVERYTHING seen
-    * so far. Day rows land under `outDir/day=YYYY-MM-DD` with
-    * overwrite, so a crash-replayed batch REPLACES its own output —
-    * replay of the SAME batch is idempotent.
-    *
-    * Contract pinned by GrowthStreamSpec, and the only one this sink
-    * promises: with day-ordered batches (the watermark-closed arrival
-    * order), the accumulated output == the batch query row-for-row,
-    * under any day-aligned batch split; churn for day d is emitted
-    * when day d is processed (a user's absence is only decidable once
-    * the day closes). A late batch that REOPENS an already-emitted
-    * day rewrites only that day's partition with the fuller presence
-    * set — neighboring days' rows (churn into d+1, and the new /
-    * returning / resurrected labels on any later day whose first-day
-    * or prev-day facts the late rows change) are NOT recomputed and
-    * go stale. Out-of-order arrival therefore needs a batch backfill
-    * over the presence store (exactly `events_growth_accounting` run
-    * on the store's rows), not this incremental sink; the upstream
-    * watermark is what makes day-ordered arrival the normal case.
-    *
-    * At scale: the store read prunes to earlier-batch partitions; the
-    * batch classifies against the store by one (user)-keyed join for
-    * first-days plus one (user, day)-keyed join for previous-day
-    * presence — both shuffle the BATCH side when the batch is small;
-    * the store never rescans its own history beyond those two joins.
-    */
-  def growthAccountBatch(storeDir: String, outDir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val storeSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("day",
-        org.apache.spark.sql.types.DateType),
-      org.apache.spark.sql.types.StructField("batch",
-        org.apache.spark.sql.types.LongType)))
-    // exclude THIS batch's partition on replay (same reasoning as
-    // dedupBatch); explicit schema so a footerless crashed write reads
-    // as empty instead of failing inference
-    val prior =
-      try s.read.schema(storeSchema).parquet(storeDir)
-        .where(col("batch") =!= batchId)
-        .select(col("user_id"), col("day"))
-      catch { case e: Exception with org.apache.spark.SparkThrowable
-        if e.getCondition == "PATH_NOT_FOUND" =>
-          s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(storeSchema.dropRight(1)))
-      }
-    val ud = batch.select(col("user_id").cast("long").as("user_id"),
-        to_date(col("ts")).as("day")).distinct()
-      .localCheckpoint(true) // read by the union, two joins, and the store write
-    val all = prior.unionByName(ud).distinct().localCheckpoint(true)
-    val firstD = all.groupBy(col("user_id")).agg(min(col("day")).as("first_day"))
-    val prevShift = all.select(col("user_id"), date_add(col("day"), 1).as("day"))
-      .distinct()
-    val labeled = ud.join(firstD, "user_id")
-      .join(prevShift.withColumn("had_prev", lit(1L)),
-        Seq("user_id", "day"), "left")
-      .select(col("day"),
-        when(col("day") === col("first_day"), "new")
-          .when(col("had_prev").isNotNull, "returning")
-          .otherwise("resurrected").as("kind"))
-    val perDay = labeled.groupBy(col("day"))
-      .agg(count(lit(1)).as("n_active"),
-        sum(when(col("kind") === "new", 1L).otherwise(0L)).as("n_new"),
-        sum(when(col("kind") === "returning", 1L).otherwise(0L))
-          .as("n_returning"),
-        sum(when(col("kind") === "resurrected", 1L).otherwise(0L))
-          .as("n_resurrected"))
-    // churn(d) = active d-1 anywhere in history, absent on d — only for
-    // the days THIS batch carries (those days just closed)
-    val batchDays = ud.select(col("day")).distinct()
-    val churned = prevShift.join(batchDays, Seq("day"), "left_semi")
-      .join(all, Seq("user_id", "day"), "left_anti")
-      .groupBy(col("day")).agg(count(lit(1)).as("n_churned"))
-    val out = perDay.join(churned, Seq("day"), "left")
-      .select(col("day").cast("string").as("day"), col("n_active"),
-        col("n_new"), col("n_returning"), col("n_resurrected"),
-        coalesce(col("n_churned"), lit(0L)).as("n_churned"))
-    // per-day dynamic overwrite: a replayed or late batch replaces
-    // exactly the day rows it recomputes
+  /** Per-partition dynamic overwrite: a replayed or late batch replaces
+    * exactly the output partitions it recomputes. */
+  private def overwritePartitions(out: DataFrame, outDir: String,
+      partCols: String*): Unit = {
+    val s = out.sparkSession
     val prevMode = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
     s.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-    try out.write.mode("overwrite").partitionBy("day").parquet(outDir)
+    try out.write.mode("overwrite").partitionBy(partCols: _*).parquet(outDir)
     finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
-    // the partition value comes from the directory at read time (the
-    // dedupBatch layout), so the frame itself carries no batch column
-    ud.write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
   }
 
-  /** The LATE-DATA recovery path [[growthAccountBatch]]'s scaladoc
-    * prescribes, as a real API instead of a doc note: recompute the
-    * full growth decomposition from the presence store's (user_id,
-    * day) rows — exactly the `events_growth_accounting` batch query,
-    * parameterized by the presence frame instead of the events table.
-    * After out-of-order arrival has staled neighboring day rows (a
-    * late batch rewrites only its own days), overwriting the output
-    * with this frame restores batch-exactness, because the store
-    * itself is append-complete regardless of arrival order
-    * (GrowthStreamSpec's late-arrival test pins the full scenario:
-    * withhold → stale → backfill → exact).
-    *
-    * At scale this is the batch query's cost — one user-keyed
-    * distinct + two keyed joins over the store — run as a scheduled
-    * repair job, not per batch.
-    */
-  def growthBackfill(presence: DataFrame): DataFrame = {
-    val ud = presence.select(col("user_id"), col("day")).distinct()
-      .localCheckpoint(true) // four consumers below ride one distinct
-    val firstD = ud.groupBy(col("user_id")).agg(min(col("day")).as("first_day"))
-    val prevShift = ud.select(col("user_id"), date_add(col("day"), 1).as("day"))
-    val labeled = ud.join(firstD, "user_id")
-      .join(prevShift.withColumn("had_prev", lit(1L)).distinct(),
-        Seq("user_id", "day"), "left")
-      .select(col("day"),
-        when(col("day") === col("first_day"), "new")
-          .when(col("had_prev").isNotNull, "returning")
-          .otherwise("resurrected").as("kind"))
-    val perDay = labeled.groupBy(col("day"))
-      .agg(count(lit(1)).as("n_active"),
-        sum(when(col("kind") === "new", 1L).otherwise(0L)).as("n_new"),
-        sum(when(col("kind") === "returning", 1L).otherwise(0L))
-          .as("n_returning"),
-        sum(when(col("kind") === "resurrected", 1L).otherwise(0L))
-          .as("n_resurrected"))
-    val churned = prevShift.join(ud, Seq("user_id", "day"), "left_anti")
-      .groupBy(col("day")).agg(count(lit(1)).as("n_churned"))
-    perDay.join(churned, Seq("day"), "left")
-      .select(col("day").cast("string").as("day"), col("n_active"),
-        col("n_new"), col("n_returning"), col("n_resurrected"),
-        coalesce(col("n_churned"), lit(0L)).as("n_churned"))
-  }
-
-  /** foreachBatch body for STREAMING adoption curves — the continuous
-    * form of `events_adoption_curve`: the presence store holds
-    * (event_type, user_id, day) rows under batchId-keyed partitions
-    * (the [[growthAccountBatch]] store discipline, with the type in
-    * the key), and each micro-batch (re)emits, for exactly the days it
-    * carries, the per-type first-time adopter count and the running
-    * adopter total — both computed against EVERYTHING seen so far, so
-    * the cumulative column needs no read-back of earlier outputs.
-    *
-    * Same contract as growthAccountBatch, and the only one promised:
-    * with day-ordered batches the accumulated output equals the batch
-    * query row-for-row under any day-aligned split
-    * (AdoptionStreamSpec), and replay of the SAME batch is idempotent
-    * (per-day dynamic partition overwrite). A late batch that reopens
-    * a day rewrites that day; later days' cum_adopters go stale until
-    * a backfill (the batch query over the store) recomputes them.
-    *
-    * At scale: the store read prunes to earlier-batch partitions; the
-    * first-seen frame is one (type, user) aggregate; the cum count
-    * joins that frame against only THIS batch's day list (day-ordered
-    * arrival keeps that list a handful of rows), never a global
-    * window.
+  /** foreachBatch body for streaming adoption curves, the continuous
+    * form of `events_adoption_curve`: the store holds (event_type,
+    * user_id, day) presence, and each batch (re)emits, for exactly the
+    * days it carries, the per-type first-time adopter count and the
+    * running adopter total, both against everything seen so far.
+    * A late batch that reopens a day rewrites that day; later days'
+    * cum_adopters go stale until the batch query is rerun over the
+    * store. AdoptionStreamSpec pins the contract.
     */
   def adoptionBatch(storeDir: String, outDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val storeSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("day",
-        org.apache.spark.sql.types.DateType),
-      org.apache.spark.sql.types.StructField("batch",
-        org.apache.spark.sql.types.LongType)))
-    val prior =
-      try s.read.schema(storeSchema).parquet(storeDir)
-        .where(col("batch") =!= batchId)
-        .select(col("event_type"), col("user_id"), col("day"))
-      catch { case e: Exception with org.apache.spark.SparkThrowable
-        if e.getCondition == "PATH_NOT_FOUND" =>
-          s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(storeSchema.dropRight(1)))
-      }
+    val prev = prior(storeDir, batchId, Seq(StructField("event_type", StringType),
+      StructField("user_id", LongType), StructField("day", DateType)))(batch.sparkSession)
     val ud = batch.select(col("event_type"),
         col("user_id").cast("long").as("user_id"),
         to_date(col("ts")).as("day")).distinct()
       .localCheckpoint(true) // read by the union, the day list, the store write
-    val all = prior.unionByName(ud).distinct()
-    val first = all.groupBy(col("event_type"), col("user_id"))
+    val first = prev.unionByName(ud).distinct()
+      .groupBy(col("event_type"), col("user_id"))
       .agg(min(col("day")).as("first_day"))
       .localCheckpoint(true) // read by the new-adopter and cum branches
     val batchDays = ud.select(col("day")).distinct()
@@ -559,25 +72,18 @@ object Monitors {
       .agg(count(lit(1)).as("cum_adopters"))
     // inner join: the batch query emits a (type, day) row only when at
     // least one user adopted that day — the streaming form must match
-    val out = newAd.join(cum, Seq("event_type", "day"))
+    overwritePartitions(newAd.join(cum, Seq("event_type", "day"))
       .select(col("event_type"), col("new_adopters"), col("cum_adopters"),
-        col("day").cast("string").as("day"))
-    val prevMode = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-    try out.write.mode("overwrite").partitionBy("day").parquet(outDir)
-    finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+        col("day").cast("string").as("day")), outDir, "day")
     ud.write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
   }
 
-  /** [[retentionBatch]]'s late-data recovery, the [[growthBackfill]]
-    * counterpart: the full retention matrix from the two stores'
-    * rows. The incremental path is exact even for a signup arriving
-    * AFTER its user's activity (the newly-cohorted backfill), but not
-    * for a signup that moves an already-known cohort EARLIER — the
-    * user's previously-emitted cells keep their old week_offset and
-    * only a recompute from the append-complete stores repairs them
-    * (RetentionStreamSpec's late-signup test drives the scenario).
-    * Output in the store twin's layout: (n_users, cohort_week string,
+  /** [[retentionBatch]]'s late-data recovery: the full retention matrix
+    * from the two stores' rows. The incremental path is exact even for
+    * a signup arriving after its user's activity, but not for a signup
+    * that moves an already-known cohort earlier — the user's emitted
+    * cells keep their old week_offset until this recompute repairs
+    * them. Output in the store layout: (n_users, cohort_week string,
     * week_offset).
     */
   def retentionBackfill(presence: DataFrame, signup: DataFrame): DataFrame = {
@@ -594,54 +100,21 @@ object Monitors {
         col("week_offset"))
   }
 
-  /** foreachBatch body for STREAMING cohort retention — the continuous
-    * form of `events_retention`: two batchId-partitioned parquet
-    * stores (weekly presence `(user_id, week)` and per-user earliest
-    * signup week), and each micro-batch recomputes EXACTLY the
-    * retention-matrix cells its rows can have changed — the cells its
-    * own (user, week) pairs land in, plus every cell of a user whose
-    * cohort week became defined in this batch (their pre-signup weekly
-    * presence within the cohort window was invisible until the signup
-    * arrived). Cell values are exact `countDistinct` over everything
-    * seen so far, so the accumulated output equals the batch query
-    * row-for-row under any day-aligned split, and replay of the SAME
-    * batch is idempotent (per-cell dynamic partition overwrite, prior
-    * reads exclude the replaying batch's own partition) —
-    * RetentionStreamSpec pins both, the GrowthStreamSpec contract
-    * shape.
-    *
-    * All calendar math runs on DATEs: `date_trunc` is monotone, so
-    * week-of-min-signup-ts equals min-of-signup-weeks and the store
-    * never needs the raw timestamps. Day-ordered arrival makes a
-    * user's cohort week write-once (the first signup seen is the
-    * earliest), which is what bounds the recompute set; out-of-order
-    * signup arrival needs the batch query over the stores (backfill),
-    * exactly like growthAccountBatch's late-day caveat.
-    *
-    * At scale: the recompute prunes to the touched cohorts — the
-    * presence-side join reads only users whose cohort week appears in
-    * the touched-cell list (a left-semi through the cohort map), so a
-    * steady-state daily batch re-aggregates the active cohorts'
-    * presence rows, not the store's full history; both stores prune
-    * to earlier-batch partitions on read.
+  /** foreachBatch body for streaming cohort retention, the continuous
+    * form of `events_retention`: two stores (weekly presence
+    * `(user_id, week)` and per-user earliest signup week), and each
+    * batch recomputes exactly the matrix cells its rows can have
+    * changed — the cells its own (user, week) pairs land in, plus
+    * every cell of a user whose cohort became defined in this batch
+    * (their earlier presence was invisible until the signup arrived).
+    * Cell values are exact `countDistinct` over everything seen so
+    * far. Day-ordered arrival makes a user's cohort week write-once,
+    * which bounds the recompute set; an out-of-order signup needs
+    * [[retentionBackfill]]. RetentionStreamSpec pins the contract.
     */
   def retentionBatch(storeDir: String, outDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
-    import org.apache.spark.sql.types._
-    def prior(sub: String, dataFields: Seq[StructField]): DataFrame = {
-      val withBatch = StructType(dataFields :+ StructField("batch", LongType))
-      try s.read.schema(withBatch).parquet(s"$storeDir/$sub")
-        .where(col("batch") =!= batchId)
-        .select(dataFields.map(f => col(f.name)): _*)
-      catch { case e: Exception with org.apache.spark.SparkThrowable
-        if e.getCondition == "PATH_NOT_FOUND" =>
-          s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(dataFields))
-      }
-    }
-    val presF = Seq(StructField("user_id", LongType), StructField("week", DateType))
-    val sigF = Seq(StructField("user_id", LongType), StructField("sig_week", DateType))
     // this batch's facts: weekly presence over ALL event types, and the
     // earliest signup week per user (min over dates = week of min ts)
     val udB = batch.select(col("user_id").cast("long").as("user_id"),
@@ -651,10 +124,14 @@ object Monitors {
       .groupBy(col("user_id").cast("long").as("user_id"))
       .agg(min(to_date(date_trunc("week", col("ts")))).as("sig_week"))
       .localCheckpoint(true) // read by newCoh, the cohort union, the store write
-    val priorSig = prior("signup", sigF).localCheckpoint(true) // newCoh + cohort map
+    val priorSig = prior(s"$storeDir/signup", batchId, Seq(
+        StructField("user_id", LongType), StructField("sig_week", DateType)))(s)
+      .localCheckpoint(true) // newCoh + cohort map
     val cohort = priorSig.unionByName(sigB)
       .groupBy(col("user_id")).agg(min(col("sig_week")).as("cohort_week"))
-    val allPres = prior("presence", presF).unionByName(udB).distinct()
+    val allPres = prior(s"$storeDir/presence", batchId, Seq(
+        StructField("user_id", LongType), StructField("week", DateType)))(s)
+      .unionByName(udB).distinct()
       .localCheckpoint(true) // read by the newCoh backfill and the recompute
     // users first cohorted by THIS batch: all their presence enters the
     // matrix at once (activity weeks seen before the signup arrived)
@@ -669,86 +146,37 @@ object Monitors {
     // exact recompute of exactly the touched cells, pruned cohort-first
     val cohTouched = cohort.join(
       cells.select(col("cohort_week")).distinct(), Seq("cohort_week"), "left_semi")
-    val out = allPres.join(cohTouched, "user_id")
+    overwritePartitions(allPres.join(cohTouched, "user_id")
       .where(col("week") >= col("cohort_week"))
       .select(col("cohort_week"), off, col("user_id"))
       .join(cells, Seq("cohort_week", "week_offset"), "left_semi")
       .groupBy(col("cohort_week"), col("week_offset"))
       .agg(countDistinct(col("user_id")).as("n_users"))
       .select(col("n_users"), col("cohort_week").cast("string").as("cohort_week"),
-        col("week_offset"))
-    val prevMode = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-    try out.write.mode("overwrite")
-      .partitionBy("cohort_week", "week_offset").parquet(outDir)
-    finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+        col("week_offset")), outDir, "cohort_week", "week_offset")
     udB.write.mode("overwrite").parquet(s"$storeDir/presence/batch=$batchId")
     sigB.write.mode("overwrite").parquet(s"$storeDir/signup/batch=$batchId")
   }
 
-  /** foreachBatch body for the STREAMING signup→click→purchase funnel —
-    * the continuous form of `events_funnel`. Unlike the presence-store
-    * twins, the state here is a per-user SUFFICIENT STATISTIC, not raw
-    * history: the chained conditional-min triple (t_signup, t_click ≥
-    * t_signup, t_purchase ≥ t_click). Under day-ordered arrival each
-    * component is write-once (t_signup is the first signup seen; a
-    * later batch can never supply an earlier timestamp), which makes
-    * the triple lossless for the chain: an old click other than
-    * t_click either WAS the chain min or sits below t_signup forever,
-    * and an old purchase predating a click that only arrives in a
-    * later batch is below that t_click by arrival order — so folding
-    * the stored triple (as three virtual events) with the new batch
-    * reproduces the full-history chain exactly. FunnelStreamSpec pins
-    * batch-equivalence under two split shapes and replay idempotence.
-    *
-    * Late data: unlike the presence-store twins, there is NO
-    * store-only backfill — the triple is intentionally LOSSY (clicks
-    * below t_signup and purchases below t_click are discarded), which
-    * is exactly what makes the state O(users). An out-of-order signup
-    * with an earlier timestamp can validate discarded events, so
-    * recovery from true late arrival is the batch query over the raw
-    * events, not over this store. The watermark upstream is what
-    * makes day-ordered arrival the normal case.
+  /** foreachBatch body for the streaming signup→click→purchase funnel,
+    * the continuous form of `events_funnel`. The state is a per-user
+    * sufficient statistic, the chained conditional-min triple
+    * (t_signup, t_click ≥ t_signup, t_purchase ≥ t_click). Under
+    * day-ordered arrival each component is write-once, so folding the
+    * stored triple (as three virtual events) with the new batch
+    * reproduces the full-history chain exactly. The triple is lossy on
+    * purpose (it keeps state O(users)), so true late arrival is
+    * repaired by the batch query over raw events, not over this store.
     *
     * Stores: `state/batch=N` holds the touched users' updated triples
-    * (write-once components ⇒ the merged view is a per-component MIN
-    * across partitions, no argmax-by-batch needed); `delta/batch=N`
-    * holds ONE row of stage-flip counts (a user entering a stage this
-    * batch). The emitted 3-row funnel is the running SUM of the
-    * deltas — never an aggregate over the user store — so the
-    * per-batch output cost is O(touched users + n_batches), and the
-    * whole-output overwrite makes replay idempotent without partition
-    * surgery.
-    *
-    * At scale: the state read prunes to earlier-batch partitions and
-    * semi-joins down to THIS batch's users before anything heavy; the
-    * chain itself is the batch query's three user-keyed aggregates
-    * over (touched triples ∪ batch events). A user's state rows
-    * accumulate one per touching batch; the production compaction is
-    * a periodic rewrite of the min-merged view (exactly what `prior`
-    * computes), same note as the presence stores.
+    * (the merged view is a per-component MIN across partitions);
+    * `delta/batch=N` holds one row of stage-flip counts. The emitted
+    * 3-row funnel is the running SUM of the deltas, rewritten whole,
+    * so replay is idempotent. FunnelStreamSpec pins the contract.
     */
   def funnelBatch(storeDir: String, outDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
-    import org.apache.spark.sql.types._
-    val stateF = Seq(StructField("user_id", LongType),
-      StructField("t_signup", TimestampNTZType),
-      StructField("t_click", TimestampNTZType),
-      StructField("t_purchase", TimestampNTZType))
-    val deltaF = Seq(StructField("d_signup", LongType),
-      StructField("d_click", LongType), StructField("d_purchase", LongType))
-    def prior(sub: String, dataFields: Seq[StructField]): DataFrame = {
-      val withBatch = StructType(dataFields :+ StructField("batch", LongType))
-      try s.read.schema(withBatch).parquet(s"$storeDir/$sub")
-        .where(col("batch") =!= batchId)
-        .select(dataFields.map(f => col(f.name)): _*)
-      catch { case e: Exception with org.apache.spark.SparkThrowable
-        if e.getCondition == "PATH_NOT_FOUND" =>
-          s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(dataFields))
-      }
-    }
     val evB = batch
       .where(col("event_type").isin("signup", "click", "purchase"))
       .select(col("user_id").cast("long").as("user_id"),
@@ -757,7 +185,9 @@ object Monitors {
     val users = evB.select(col("user_id")).distinct()
     // write-once components ⇒ the merged state is a per-component min;
     // pruned to this batch's users BEFORE the fold
-    val oldTouched = prior("state", stateF)
+    val oldTouched = prior(s"$storeDir/state", batchId,
+        StructField("user_id", LongType) +: Seq("t_signup", "t_click", "t_purchase")
+          .map(StructField(_, TimestampNTZType)))(s)
       .join(users, Seq("user_id"), "left_semi")
       .groupBy(col("user_id"))
       .agg(min(col("t_signup")).as("t_signup"), min(col("t_click")).as("t_click"),
@@ -797,178 +227,36 @@ object Monitors {
     delta.coalesce(1).write.mode("overwrite")
       .parquet(s"$storeDir/delta/batch=$batchId")
     // running funnel = Σ deltas (including this batch's, read back so
-    // the sum sees exactly the partitions on disk); 3-row stack, whole
-    // overwrite — replay rewrites the same rows
-    val cum = s.read.schema(StructType(deltaF :+ StructField("batch", LongType)))
-      .parquet(s"$storeDir/delta")
+    // the sum sees exactly the partitions on disk)
+    val deltaF = Seq("d_signup", "d_click", "d_purchase", "batch")
+      .map(StructField(_, LongType))
+    s.read.schema(StructType(deltaF)).parquet(s"$storeDir/delta")
       .agg(sum(col("d_signup")).as("n_signup"), sum(col("d_click")).as("n_click"),
         sum(col("d_purchase")).as("n_purchase"))
       .select(expr("stack(3, 'signup', n_signup, 'click_after', n_click, " +
         "'purchase_after', n_purchase) as (stage, n_users)"))
-    cum.coalesce(1).write.mode("overwrite").parquet(outDir)
+      .coalesce(1).write.mode("overwrite").parquet(outDir)
   }
 
-  /** foreachBatch body for STREAMING approximate distinct users per
-    * event type — the MERGEABLE-SKETCH store pattern, the third store
-    * shape after raw presence (growth/adoption/retention) and the
-    * sufficient-statistic triple (funnel): the store holds one
-    * Datasketches HLL sketch per (event_type, batch), and the emitted
-    * count reads `hll_union_agg` over the partials. HLL registers
-    * merge by elementwise MAX, so the union of per-batch sketches is
-    * STATE-IDENTICAL to a single-shot sketch over the concatenated
-    * stream — not approximately equal, the same bytes-in-registers —
-    * which DistinctStreamSpec pins against the batch single-shot
-    * under two split shapes, plus replay idempotence and the ±2%
-    * audit versus the exact count (the events_approx_distinct
-    * certificate bound at lgK=12).
-    *
-    * Unlike the presence stores, NOTHING here scales with history:
-    * a batch writes |types| sketch rows (≤ 4 KB each), the readout
-    * unions |types|·|batches| rows, and [[compactStore]] with the
-    * `hll_union_agg` fold collapses the history to |types| rows —
-    * the sketch store is the one whose compaction changes the READ
-    * cost, not just the partition count. This is the streaming form
-    * of the engine's partial-state mergeability contract
-    * (`events_rollup_merge` pins the batch form).
+  /** foreachBatch body for streaming approximate distinct users per
+    * event type: the store holds one HLL sketch per (event_type,
+    * batch), and the emitted count reads `hll_union_agg` over the
+    * partials. HLL registers merge by elementwise MAX, so the union of
+    * per-batch sketches is state-identical to a single-shot sketch over
+    * the concatenated stream (DistinctStreamSpec pins it under two
+    * split shapes, plus replay idempotence).
     */
   def distinctCountBatch(storeDir: String, outDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val part = batch
-      .groupBy(col("event_type"))
+    batch.groupBy(col("event_type"))
       .agg(hll_sketch_agg(col("user_id").cast("long"), lit(12)).as("sk"))
-    part.coalesce(1).write.mode("overwrite")
-      .parquet(s"$storeDir/batch=$batchId")
+      .coalesce(1).write.mode("overwrite").parquet(s"$storeDir/batch=$batchId")
     // readout over exactly the partitions on disk (own batch included
     // via its just-written partition, so replay reads its own rewrite)
-    val est = s.read.parquet(storeDir)
+    batch.sparkSession.read.parquet(storeDir)
       .groupBy(col("event_type"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"), lit(false)))
         .as("n_approx"))
-    est.coalesce(1).write.mode("overwrite").parquet(outDir)
-  }
-
-  /** The sketch store's [[compactStore]] fold: union the per-batch
-    * HLL partials per type (further-mergeable — a union result is
-    * itself a sketch). */
-  def hllFold(df: DataFrame): DataFrame =
-    df.groupBy(col("event_type"))
-      .agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
-
-  /** Long-horizon maintenance for the batchId-partitioned stores every
-    * foreachBatch twin appends to ([[growthAccountBatch]],
-    * [[adoptionBatch]], [[retentionBatch]], [[funnelBatch]]): rewrite
-    * the partitions `batch ≤ upTo` as ONE merged partition at
-    * `batch=upTo` and drop the rest, so the per-batch `prior` read
-    * stops paying one partition per historical batch. `merge` is the
-    * store's own read-side fold — `distinct()` for the presence
-    * stores, the per-key component-MIN for funnel state, the global
-    * SUM for the delta store.
-    *
-    * Contract: `upTo` must be a batch the streaming checkpoint has
-    * COMMITTED — a replay of batch N reads `batch =!= N`, so a batch
-    * that could still replay must keep its own partition (folding it
-    * into another id would make its rows visible to its own replay).
-    * foreachBatch replays only the latest uncommitted batch, so
-    * `upTo = latestBatchId - 1` is always safe mid-stream.
-    * StoreCompactionSpec pins output-invariance mid-stream, replay
-    * idempotence after compaction, convergence under double-compact,
-    * the partition-count shrink, and re-run convergence from every
-    * crash window below.
-    *
-    * Crash-safety is a MANIFEST COMMIT, not fold idempotence (the r19
-    * form relied on the read-side fold absorbing duplicates, which is
-    * true for distinct/min/hll-union but FALSE for the delta store's
-    * global SUM — a crash between its swap and its source deletes
-    * would double-count, and a re-run would bake the double count in).
-    * Order of operations:
-    *
-    *  1. fold the sources into a DOT-PREFIXED `.compact-tmp` dir
-    *     (hidden from every parquet reader), then atomically publish
-    *     `.compact-manifest` naming `upTo` and the exact source
-    *     partitions folded (write-then-rename). The manifest is the
-    *     commit point: before it, a re-run rebuilds from the intact
-    *     sources; after it, a re-run NEVER re-reads sources (they may
-    *     be partially deleted) and resumes from the recorded list.
-    *  2. delete every recorded source — including the old
-    *     `batch=upTo` — BEFORE the merged view becomes readable. This
-    *     ordering is what makes SUM folds exactly-once: at no point do
-    *     a source row and its folded copy coexist in readable
-    *     partitions, so no crash point can double-count.
-    *  3. rename `.compact-tmp` → `batch=upTo`, then drop the manifest.
-    *     A manifest with no tmp means a previous run already promoted
-    *     (rename-then-crash): the leftover manifest is just deleted.
-    *
-    * The window between 2 and 3 (sources gone, merged still hidden) is
-    * NOT readable-consistent — acceptable because compaction is a
-    * maintenance job on a quiesced store (the single-JVM analog of a
-    * table-maintenance lock) and a crash there recovers exactly via
-    * the manifest; it is never silent loss. Deletions are CHECKED
-    * (`rm` raises on a surviving file instead of silently leaving a
-    * double-count source behind — the r19 form discarded
-    * File.delete()'s result).
-    *
-    * At scale this is one read+shuffle+write over the merged view —
-    * the same cost as a single batch's `prior` fold — scheduled like
-    * any table-maintenance job.
-    */
-  def compactStore(spark: org.apache.spark.sql.SparkSession, storeDir: String,
-      upTo: Long)(merge: DataFrame => DataFrame): Unit = {
-    val root = new java.io.File(storeDir)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      if (f.exists() && !f.delete())
-        throw new java.io.IOException(s"compaction could not delete $f")
-    }
-    val tmp = new java.io.File(root, ".compact-tmp")
-    val manifest = new java.io.File(root, ".compact-manifest")
-
-    def promote(srcNames: Seq[String]): Unit = {
-      // sources first (see scaladoc: SUM exactly-once needs the folded
-      // copy unreadable until every source row is gone)
-      srcNames.foreach(n => rm(new java.io.File(root, n)))
-      val target = new java.io.File(root, s"batch=$upTo")
-      require(tmp.renameTo(target), s"compaction swap failed for $target")
-      rm(manifest)
-    }
-
-    if (manifest.exists()) {
-      // resume a crashed run: the manifest is the commit point, so the
-      // sources may be partially deleted — NEVER rebuild from them
-      val src = scala.io.Source.fromFile(manifest)
-      val lines = try src.getLines().toList finally src.close()
-      val recordedUpTo = lines.head.stripPrefix("upTo=").toLong
-      require(recordedUpTo == upTo,
-        s"pending compaction to batch=$recordedUpTo must finish first " +
-          s"(re-run compactStore with upTo=$recordedUpTo)")
-      if (tmp.exists()) promote(lines.tail)
-      else rm(manifest) // promoted already; only the manifest survived
-      return
-    }
-
-    val parts = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      .flatMap(f => scala.util.Try(f.getName.stripPrefix("batch=").toLong)
-        .toOption.map(_ -> f))
-      .filter { case (b, _) => b <= upTo }
-    if (parts.isEmpty) return
-    // read schema comes from the files themselves (each store's writer
-    // fixed it); the batch value is a directory-name fact, so the
-    // merged rows carry no batch column — exactly the per-partition
-    // file layout the stores write
-    val merged = merge(
-      spark.read.parquet(parts.map(_._2.getPath): _*))
-      // materialized BEFORE any rewrite: the merged frame's lineage
-      // reads the very partitions the fold below replaces
-      .localCheckpoint(true)
-    rm(tmp)
-    merged.write.mode("overwrite").parquet(tmp.getPath)
-    // commit point: manifest published atomically (write-then-rename)
-    val mTmp = new java.io.File(root, ".compact-manifest.tmp")
-    val w = new java.io.PrintWriter(mTmp)
-    try { w.println(s"upTo=$upTo"); parts.foreach(p => w.println(p._2.getName)) }
-    finally w.close()
-    require(mTmp.renameTo(manifest), s"manifest publish failed in $root")
-    promote(parts.map(_._2.getName).toSeq)
+      .coalesce(1).write.mode("overwrite").parquet(outDir)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * the consumer-side keyed stateful pass of `consumer.py:26-34`,
   * generalized to session semantics; SURVEY §2.9).
   *
-  * Unlike the foreachBatch twins (retention/funnel/growth in
+  * Unlike the foreachBatch twins (adoption/retention/funnel in
   * [[Monitors]]), this one is the NATIVE stateful operator end to end:
   * `session_window` over a watermarked event-time column, Append mode.
   * The engine owns the open-session state (merge-on-arrival in the

@@ -9,9 +9,7 @@ import graft.streaming.Monitors
   * elementwise max, so the union of per-batch sketches must yield the
   * SAME estimate as one single-shot sketch over all events, under any
   * batch split. Plus the family contracts (replay idempotence) and
-  * the ±2% certificate versus the exact count, and compactStore with
-  * the hll_union_agg fold collapsing history without moving the
-  * estimate.
+  * the ±2% certificate versus the exact count.
   */
 class DistinctStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -69,21 +67,6 @@ class DistinctStreamSpec extends SparkSpec {
     Monitors.distinctCountBatch(store, out)(
       events.where(col("d").isin(
         days.grouped(10).toSeq.last.map(_.toString): _*)), (nBatches - 1).toLong)
-    assert(outRows(out) === singleShot)
-  }
-
-  test("compaction with the hll_union_agg fold moves nothing") {
-    val (store, out) = (tmp("c") + "/store", tmp("c") + "/out")
-    days.zipWithIndex.foreach { case (d, i) =>
-      Monitors.distinctCountBatch(store, out)(
-        events.where(col("d") === d), i.toLong)
-    }
-    Monitors.compactStore(spark, store, (days.size - 2).toLong)(Monitors.hllFold)
-    // the store shrank to [compacted, last] and a readout-triggering
-    // batch (the last day again — committed, so replay is legal) sees
-    // identical estimates through the compacted partial
-    Monitors.distinctCountBatch(store, out)(
-      events.where(col("d") === days.last), (days.size - 1).toLong)
     assert(outRows(out) === singleShot)
   }
 }
