@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
@@ -28,18 +27,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // dev tooling: SPARK_GRAFT_ONLY=q1,q2 profiles a subset (per-query
     // stage attribution without a 90 s full sweep); unset = everything
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(Tables.nanosConf, "true")
+    val spark = LocalSession.builder(cpus, extensions = true)
       // drain shuffle/broadcast refs even when the heap never pressures
       // a full GC on its own (default interval is 30 min — never fires
       // within a bench run)

@@ -464,7 +464,7 @@ private[graft] trait CorpusExtensionQueries extends ExtensionQueriesBase {
     // (r19 sweep: 6 scans -> 0)
     val sh = Text.distinctShingles(docs, col("text"), col("doc_id"), 5)
       .withColumn("split", graft.ops.Sampling.assignSplit(col("doc_id")))
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val trainSh = sh.where(col("split") === "train").select("shingle").distinct()
     val evalSh = sh.where(col("split") =!= "train")
     val leaked = evalSh.join(trainSh, Seq("shingle"), "left_semi")
@@ -489,7 +489,7 @@ private[graft] trait CorpusExtensionQueries extends ExtensionQueriesBase {
     // bigram frame pinned for its three consumers (r19 sweep: 6 -> 0)
     val sh = Text.distinctShingles(docs, col("text"), col("doc_id"), 2)
       .withColumn("split", graft.ops.Sampling.assignSplit(col("doc_id")))
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val trainSh = sh.where(col("split") === "train").select("shingle").distinct()
     val evalSh = sh.where(col("split") =!= "train")
     val novel = evalSh.join(trainSh, Seq("shingle"), "left_anti")
@@ -625,7 +625,7 @@ private[graft] trait CorpusExtensionQueries extends ExtensionQueriesBase {
         col("lang"), col("source"), col("n_chars"))
       // feeds the base aggregate + two mode elections — three
       // consumers of one left join; pin it (family discipline)
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val base = lab.groupBy(col("cluster")).agg(
       count(lit(1)).as("n_members"),
       min(col("doc_id")).as("rep_doc_id"),

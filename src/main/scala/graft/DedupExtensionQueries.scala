@@ -117,7 +117,7 @@ private[graft] trait DedupExtensionQueries extends ExtensionQueriesBase {
       .groupBy(col("comp"), col("source")).agg(count(lit(1)).as("n"))
       // pinned: the size fold and the majority window both read this
       // cluster-sized frame — unpinned, each re-runs the documents join
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val tot = m.groupBy(col("comp"))
       .agg(sum(col("n")).as("cluster_size"),
         count(lit(1)).as("n_sources"))

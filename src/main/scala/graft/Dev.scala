@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc dev scratch main (not part of the library surface):
   * `runMain graft.Dev q1 q2 ...` times each named query `n` times in a
   * fresh JVM — the uncontaminated ground truth for bench numbers.
   */
 object Dev {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosConf, "true")
-      .getOrCreate()
+    val spark = LocalSession.builder(32, extensions = true).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if (args.headOption.contains("recall")) {

@@ -392,7 +392,7 @@ private[graft] trait EventsExtensionQueries extends ExtensionQueriesBase {
           .otherwise(0L)).as("y"))
       .withColumn("variant",
         when(col("user_id") % 2 === 0, "A").otherwise("B"))
-      .transform(graft.ops.AnnCache.pinQuery) // two 1-row consumers below + nothing else
+      .transform(graft.ops.AnnCache.pin) // two 1-row consumers below + nothing else
     val mo = per.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
       sum(col("y")).as("sy"), sum(col("x") * col("x")).as("sxx"),
       sum(col("x") * col("y")).as("sxy"))
@@ -729,7 +729,7 @@ private[graft] trait EventsExtensionQueries extends ExtensionQueriesBase {
     val daily = Tables.events(s, dir)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("x"))
-      .transform(graft.ops.AnnCache.pinQuery) // both sides of the lag join + nothing else
+      .transform(graft.ops.AnnCache.pin) // both sides of the lag join + nothing else
     val lagged = daily
       .withColumn("k", explode(expr("sequence(1, 7)")))
       .withColumn("day_k", date_add(col("day"), col("k")))
@@ -1041,7 +1041,7 @@ private[graft] trait EventsExtensionQueries extends ExtensionQueriesBase {
     val per = users.groupBy(col("variant"))
       .agg(count(lit(1)).as("n_users"), sum(col("converted")).as("n_conv"))
       .withColumn("conv_bp", expr("(10000 * n_conv) div n_users"))
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     // uplift of B over A in bp of A's rate: (convB·nA − convA·nB)
     // scaled — exact integers, both engines truncate identically on
     // the non-negative clamp
@@ -1075,7 +1075,7 @@ private[graft] trait EventsExtensionQueries extends ExtensionQueriesBase {
     val daily = Tables.events(s, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n"))
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     daily.join(
         daily.select(col("event_type"), date_add(col("day"), 7).as("day"),
           col("n").as("pred")),
@@ -1110,7 +1110,7 @@ private[graft] trait EventsExtensionQueries extends ExtensionQueriesBase {
       .groupBy(col("user_id"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("n"))
       .withColumn("d", datediff(col("day"), lit("1970-01-01")))
-      .transform(graft.ops.AnnCache.pinQuery) // three consumers below + nothing else
+      .transform(graft.ops.AnnCache.pin) // three consumers below + nothing else
     def lagged(k: Int, as: String) = daily.select(col("user_id"),
       (col("d") + k).as("d"), col("n").as(as))
     val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
@@ -1444,7 +1444,7 @@ private[graft] trait EventsExtensionQueries extends ExtensionQueriesBase {
   private def qEventsGrowthAccounting(s: SparkSession, dir: String): DataFrame = {
     val ud = Tables.events(s, dir)
       .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      .transform(graft.ops.AnnCache.pinQuery) // four consumers below ride one distinct
+      .transform(graft.ops.AnnCache.pin) // four consumers below ride one distinct
     val firstD = ud.groupBy(col("user_id")).agg(min(col("day")).as("first_day"))
     val prevShift = ud.select(col("user_id"), date_add(col("day"), 1).as("day"))
     val labeled = ud.join(firstD, "user_id")
@@ -1510,7 +1510,7 @@ private[graft] trait EventsExtensionQueries extends ExtensionQueriesBase {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         max(unix_micros(col("ts"))).as("last_us"))
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val frontier = last.agg(max(col("last_us")).as("corpus_us"))
     last.crossJoin(broadcast(frontier))
       .select(col("event_type"), col("n_events"),

@@ -338,7 +338,7 @@ private[graft] trait EventsGraphExtensionQueries extends ExtensionQueriesBase {
     // scan + distinct shuffle run once, not five times (same
     // discipline as Graph.pageRank's edge table)
     val ut = Tables.events(s, dir).select(col("user_id"), col("event_type"))
-      .distinct().transform(graft.ops.AnnCache.pinQuery)
+      .distinct().transform(graft.ops.AnnCache.pin)
     val n1 = ut.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
     val tot = ut.select(col("user_id")).distinct().agg(count(lit(1)).as("nt"))
     val p = ut.as("a").join(ut.as("b"),

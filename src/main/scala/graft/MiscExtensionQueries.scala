@@ -694,7 +694,7 @@ private[graft] trait MiscExtensionQueries extends ExtensionQueriesBase {
       // pinned: year totals and the share/lag output both read this
       // (nation, year) frame — unpinned, each branch re-scans the
       // three-table join
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val yt = rev.groupBy(col("yr")).agg(sum(col("rev_x100")).as("total"))
     rev.join(broadcast(yt), "yr")
       .select(col("n_name"), col("yr"), col("rev_x100"),
@@ -804,7 +804,7 @@ private[graft] trait MiscExtensionQueries extends ExtensionQueriesBase {
       .agg(sum(col("spend")).as("spend"))
       // pinned: year means and the tier projection both read this
       // (customer, year) frame — unpinned, each branch re-scans orders
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val ym = cy.groupBy(col("yr"))
       .agg(count(lit(1)).as("n_cust"), sum(col("spend")).as("total"))
     val tiered = cy.join(broadcast(ym), "yr")
@@ -816,7 +816,7 @@ private[graft] trait MiscExtensionQueries extends ExtensionQueriesBase {
           .when(col("m") < 2L, "1-2x")
           .when(col("m") < 4L, "2-4x")
           .otherwise("4x+").as("tier"))
-      .transform(graft.ops.AnnCache.pinQuery) // both sides of the year+1 self-join
+      .transform(graft.ops.AnnCache.pin) // both sides of the year+1 self-join
     tiered.as("a").join(tiered.as("b"),
         col("a.o_custkey") === col("b.o_custkey") &&
           col("b.yr") === col("a.yr") + 1L)
@@ -843,7 +843,7 @@ private[graft] trait MiscExtensionQueries extends ExtensionQueriesBase {
       .agg(count(lit(1)).as("n_orders"), sum(col("rev_x100")).as("rev_x100"))
       // pinned: the total fold and the output both read this 12-row
       // frame — unpinned, each branch re-scans orders
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     m.crossJoin(broadcast(m.agg(sum(col("rev_x100")).as("total"))))
       .select(col("month_of_year"), col("n_orders"), col("rev_x100"),
         // decimal(38): 1200·rev clears 2⁶³ near 10¹⁶ cents of revenue

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.cdc.{CdcEvent, CdcWire}
 import graft.sinks.Sinks.ParquetSnapshotStore
@@ -20,13 +19,8 @@ import graft.streaming.CdcStream
   */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.nanosConf, "true")
-      .getOrCreate()
+    val spark = LocalSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
+      extensions = false).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

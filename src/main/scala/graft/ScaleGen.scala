@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool (not library surface): synthesize a larger scale factor
@@ -37,12 +37,7 @@ object ScaleGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val k = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosConf, "true")
-      .getOrCreate()
+    val spark = LocalSession.builder(32, extensions = false).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val reps = broadcast(spark.range(k).select(col("id").as("rep")))

@@ -848,7 +848,7 @@ object SparkEntry {
       // pinned: the threshold scalar and the filtered output both read
       // this per-part frame — unpinned, each branch re-runs the whole
       // partsupp⋈supplier⋈nation⋈region tree (measured 10 scans → 5)
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val scalar = grouped.agg(
       checkedLong(sum(col("stock_value_cents").cast("decimal(38,0)")), "total"),
       count(lit(1)).as("n_groups"))
@@ -1360,7 +1360,7 @@ object SparkEntry {
     def activeOn(day: String) = Tables.events(s, dir)
       .where(to_date(col("ts")) === lit(day).cast("date"))
       .select(col("user_id")).distinct()
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val a = activeOn("2024-01-05")
     val b = activeOn("2024-01-06")
     def tagCount(df: DataFrame, m: String) =

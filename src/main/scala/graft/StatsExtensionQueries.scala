@@ -43,7 +43,7 @@ private[graft] trait StatsExtensionQueries extends ExtensionQueriesBase {
       .agg(min(col("day")).as("f_day"),
         min(when(col("event_type") === "purchase", col("day"))).as("c_day"),
         max(col("day")).as("m_day"))
-      .transform(graft.ops.AnnCache.pinQuery) // read by the frontier fold and the lifetimes
+      .transform(graft.ops.AnnCache.pin) // read by the frontier fold and the lifetimes
     val frontier = u.agg(max(col("m_day")).as("l_day"))
     val t = u.crossJoin(broadcast(frontier))
       .select(datediff(col("c_day"), col("f_day")).cast("long").as("t_conv"),
@@ -88,7 +88,7 @@ private[graft] trait StatsExtensionQueries extends ExtensionQueriesBase {
       .select((((datediff(col("day"), lit("1970-01-01").cast("date")) + 3) % 7) + 1)
         .cast("long").as("iso_dow"), col("hr"))
       .groupBy(col("iso_dow"), col("hr")).agg(count(lit(1)).as("cnt"))
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val peak = cells.withColumn("rk", row_number().over(
         Window.partitionBy(col("iso_dow")).orderBy(col("cnt").desc, col("hr"))))
       .where(col("rk") === 1)
@@ -123,7 +123,7 @@ private[graft] trait StatsExtensionQueries extends ExtensionQueriesBase {
     val per = Tables.events(s, dir)
       .groupBy(col("event_type"), col("user_id"))
       .agg(count(lit(1)).as("n"))
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val tot = per.groupBy(col("event_type")).agg(sum(col("n")).as("total"))
     per.join(broadcast(tot), "event_type")
       .select(col("event_type"),
@@ -218,7 +218,7 @@ private[graft] trait StatsExtensionQueries extends ExtensionQueriesBase {
     // this day histogram — unpinned, each branch re-scans events
     val hist = Tables.events(s, dir)
       .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("n_events"))
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val w = Window.orderBy(col("day"))
     val med = hist
       .withColumn("rn", row_number().over(Window.orderBy(col("n_events"), col("day"))))
@@ -298,7 +298,7 @@ private[graft] trait StatsExtensionQueries extends ExtensionQueriesBase {
       // seg BEFORE this row: touches in segment s convert at purchase s+1
       .withColumn("seg", coalesce(sum(col("is_p")).over(
         w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .transform(graft.ops.AnnCache.pinQuery) // touches, purchases, and path sizes all read it
+      .transform(graft.ops.AnnCache.pin) // touches, purchases, and path sizes all read it
     val touches = ev
       .where(col("event_type").isin("click", "view", "signup"))
       .withColumn("rn", row_number().over(

@@ -110,7 +110,7 @@ private[graft] trait TextExtensionQueries extends ExtensionQueriesBase {
       .select(col("source"), explode(Text.tokens(col("text"))).as("term"))
       .groupBy(col("source"), col("term"))
       .agg(count(lit(1)).as("f"))
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val tot = tf.groupBy(col("source"))
       .agg(sum(col("f")).as("n_tokens"), count(lit(1)).as("vocab"))
     tf.join(broadcast(tot), "source")
@@ -750,10 +750,10 @@ private[graft] trait TextExtensionQueries extends ExtensionQueriesBase {
     // runs once per table, not once per probe (measured 7 scans → 5)
     val uni = train.select(explode(col("tk")).as("u1"))
       .groupBy("u1").agg(count(lit(1)).as("c1"))
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val big = grams(train, 2).groupBy(col("w0").as("b1"), col("w1").as("b2"))
       .agg(count(lit(1)).as("c2"))
-      .transform(graft.ops.AnnCache.pinQuery)
+      .transform(graft.ops.AnnCache.pin)
     val tri = grams(train, 3).groupBy(col("w0").as("t1"), col("w1").as("t2"),
         col("w2").as("t3")).agg(count(lit(1)).as("c3"))
     val tot = train.agg(sum(size(col("tk")).cast("long")).as("t"))

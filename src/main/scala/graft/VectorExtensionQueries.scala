@@ -570,7 +570,7 @@ private[graft] trait VectorExtensionQueries extends ExtensionQueriesBase {
     val mk = mutualKnnEdges(s, dir)
     val edges = mk.select(col("vec_a").as("src"), col("vec_b").as("dst"))
       .unionAll(mk.select(col("vec_b").as("src"), col("vec_a").as("dst")))
-      .transform(graft.ops.AnnCache.pinQuery) // 2 rounds re-read it; the kNN build runs once
+      .transform(graft.ops.AnnCache.pin) // 2 rounds re-read it; the kNN build runs once
     val seeds = emb.select(col("vec_id"),
       when(col("vec_id") % 10 === 0, col("label").cast("long")).as("lab"))
     var lab = seeds

@@ -88,8 +88,9 @@ object AnnCache {
     * attribution honest. */
   @volatile var eagerPins: Boolean = true
 
-  /** Materialize an index component so it survives inter-query cache
-    * hygiene and carries no training lineage. */
+  /** Materialize an index component or a query's shared frame so it
+    * survives inter-query cache hygiene and carries no build lineage;
+    * the query builders call it mid-chain (`.transform(AnnCache.pin)`). */
   def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = eagerPins)
 
   /** Merge a pinned frame's checkpoint partitions to a data-scaled
@@ -110,10 +111,6 @@ object AnnCache {
     if (!eagerPins) df
     else df.coalesce(math.max(1L, math.min(df.rdd.getNumPartitions.toLong,
       df.count() / rowsPerTask + 1L)).toInt)
-
-  /** The query builders' shared-frame pin (`.transform(AnnCache
-    * .pinQuery)`): same gate as [[pin]], usable mid-chain. */
-  def pinQuery(df: DataFrame): DataFrame = df.localCheckpoint(eager = eagerPins)
 
   /** Drop every cached index (test hygiene). */
   def clear(): Unit = cache.clear()

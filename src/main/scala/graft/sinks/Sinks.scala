@@ -222,13 +222,17 @@ object Sinks {
       }
       // final totals: |buckets|×|groups| partial rows, never the snapshot
       val dirs = existingBuckets.map(partDir).filter(Files.exists(_)).map(_.toString)
-      if (dirs.nonEmpty) {
+      val totals =
+        if (dirs.nonEmpty) Some(spark.read.parquet(dirs: _*)
+          .groupBy(col(groupCol))
+          .agg(sum(col("_sum")).as("total_salary"), sum(col("_n")).as("n_emps")))
+        // every key deleted: the previous table's columns, no rows
+        else if (Files.exists(Paths.get(totalsPath))) Some(spark.read.parquet(totalsPath).limit(0))
+        else None
+      totals.foreach { df =>
         val tmp = Paths.get(totalsPath + ".tmp")
         deleteRecursive(tmp)
-        spark.read.parquet(dirs: _*)
-          .groupBy(col(groupCol))
-          .agg(sum(col("_sum")).as("total_salary"), sum(col("_n")).as("n_emps"))
-          .write.parquet(tmp.toString)
+        df.write.parquet(tmp.toString)
         swapInto(Paths.get(totalsPath), tmp)
       }
     }

@@ -34,6 +34,14 @@ import graft.sinks.Sinks.{SnapshotStore, recoverSwap}
   */
 object CdcStream {
 
+  /** Name of the per-batch observed-metrics row surfaced in
+    * `StreamingQueryProgress.observedMetrics`: `n_wire` = messages
+    * entering the batch. Computed inline on the executors by the
+    * `observe` node — zero extra passes — and read by monitoring via
+    * the progress listener; at fleet scale this is the per-batch
+    * throughput/health signal without a second aggregation query. */
+  val MetricsName = "cdc_wire"
+
   /** Start the pipeline from a Kafka-shaped (`key`,`value`) stream.
     *
     * @param wire      streaming DataFrame with a string `value` column
@@ -44,14 +52,6 @@ object CdcStream {
     *                  process-local watermark, which lost state on
     *                  restart — SURVEY §2.9)
     */
-  /** Name of the per-batch observed-metrics row surfaced in
-    * `StreamingQueryProgress.observedMetrics`: `n_wire` = messages
-    * entering the batch. Computed inline on the executors by the
-    * `observe` node — zero extra passes — and read by monitoring via
-    * the progress listener; at fleet scale this is the per-batch
-    * throughput/health signal without a second aggregation query. */
-  val MetricsName = "cdc_wire"
-
   def start(wire: DataFrame, store: SnapshotStore, dlqPath: String,
             checkpoint: String, trigger: Trigger = Trigger.AvailableNow(),
             totalsPath: Option[String] = None): StreamingQuery = {

@@ -66,11 +66,19 @@ class BucketedStoreSpec extends SparkSpec {
 
   test("deleting every key removes all bucket dirs") {
     val path = tmpdir()
+    val totals = path + "_totals"
     val store = new BucketedSnapshotStore(spark, path, Seq("emp_id"), numBuckets = 4)
     store.merge(batch((1, "a", 1L, "insert"), (2, "b", 1L, "insert")), "ts")
     assert(store.exists)
+    store.writeTotals(totals, "emp_city", "ts")
+    assert(spark.read.parquet(totals).count() === 2)
     store.merge(batch((1, "a", 2L, "delete"), (2, "b", 2L, "delete")), "ts")
     assert(!store.exists && store.load().isEmpty)
+    // the totals table follows the empty snapshot instead of going stale
+    store.writeTotals(totals, "emp_city", "ts")
+    val after = spark.read.parquet(totals)
+    assert(after.columns.toSeq === Seq("emp_city", "total_salary", "n_emps"))
+    assert(after.count() === 0)
   }
 
   test("incremental totals equal a full recompute after every merge") {

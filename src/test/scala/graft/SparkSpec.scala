@@ -11,14 +11,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(graft.Tables.nanosConf, "true")
-      .getOrCreate()
+    val s = LocalSession.builder(4, extensions = true).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
