@@ -57,8 +57,7 @@ object ApplyChanges {
     * Full-outer join on the key: change row wins when present unless its
     * action is `delete`; otherwise the snapshot row survives. Changes
     * must already be reduced to one row per key (use [[latestPerKey]]).
-    * The join shuffles both sides by the key only; with a bucketed
-    * snapshot the snapshot-side shuffle disappears.
+    * The join shuffles both sides by the key only.
     */
   def mergeIntoSnapshot(snapshot: DataFrame, changes: DataFrame,
                         keys: Seq[String], actionCol: String = "action"): DataFrame = {

@@ -18,9 +18,10 @@ import graft.cdc.ApplyChanges
   */
 object Sinks {
 
-  /** D1 surface shared by the snapshot-store variants: batch merge in,
-    * full read out, D2 totals derived from the stored state (so deletes
-    * and updates retract — SURVEY §7.5 risk 1). */
+  /** D1 surface of the snapshot store: batch merge in, full read out,
+    * D2 totals derived from the stored state (so deletes and updates
+    * retract — SURVEY §7.5 risk 1). A trait so a wrapper (perfbench's
+    * timing store) can stand in for [[ParquetSnapshotStore]]. */
   trait SnapshotStore {
     def exists: Boolean
     def load(): Option[DataFrame]
@@ -59,10 +60,8 @@ object Sinks {
     if (!Files.exists(target) && Files.exists(oldOf(target)))
       Files.move(oldOf(target), target, StandardCopyOption.ATOMIC_MOVE)
 
-  /** D1 (simple form): one parquet dir, rewritten whole every merge.
-    * Fine at fixture scale; see [[BucketedSnapshotStore]] for the form
-    * that survives 100 TB (rewrite cost ∝ touched keys, not snapshot
-    * size).
+  /** D1: one parquet dir, rewritten whole every merge, so a merge
+    * costs the snapshot size, not the touched keys.
     */
   final class ParquetSnapshotStore(spark: SparkSession, path: String, keys: Seq[String])
       extends SnapshotStore {
@@ -113,146 +112,6 @@ object Sinks {
           .write.parquet(tmp.toString)
         swapInto(Paths.get(totalsPath), tmp)
       }
-    }
-  }
-
-  /** D1 (scale form): the snapshot hash-bucketed by key into
-    * `numBuckets` fixed, independently-swappable parquet dirs
-    * (`path/b=i`). A merge shuffles the batch once by key, joins it
-    * against ONLY the buckets its keys land in, and rewrites only those
-    * dirs — at 100 TB a micro-batch touching 0.1% of keys rewrites
-    * ~0.1% of buckets instead of the whole snapshot. Co-location comes
-    * free: bucket id is a pure function of the key on both sides.
-    *
-    * D2 totals are maintained from per-bucket partial aggregates
-    * (`path_parts/b=i`): a merge recomputes partials for touched
-    * buckets only, and the final totals re-aggregate |buckets|×|groups|
-    * partial rows — never the full snapshot.
-    */
-  final class BucketedSnapshotStore(spark: SparkSession, path: String,
-                                    keys: Seq[String], numBuckets: Int = 16)
-      extends SnapshotStore {
-    import org.apache.spark.sql.functions._
-    private val root = Paths.get(path)
-    private val partsRoot = Paths.get(path + "_parts")
-    private def bucketDir(i: Int): Path = root.resolve(s"b=$i")
-    private def partDir(i: Int): Path = partsRoot.resolve(s"b=$i")
-    private def bucketExpr: org.apache.spark.sql.Column =
-      pmod(hash(keys.map(col): _*), lit(numBuckets))
-
-    /** Touched buckets of the most recent merge (test/monitoring hook). */
-    @volatile private[graft] var lastTouched: Seq[Int] = Nil
-    /** Buckets touched since the last totals refresh — accumulates
-      * across merges so totals stay exact when several batches land
-      * between writeTotals calls. `partialsKnownFresh` is false until
-      * THIS instance has written totals: a fresh instance over existing
-      * dirs cannot know which on-disk partials are stale (another
-      * process may have merged with totals disabled), so it refreshes
-      * every bucket once. */
-    @volatile private var staleSinceTotals: Set[Int] = Set.empty
-    @volatile private var partialsKnownFresh: Boolean = false
-    (0 until numBuckets).foreach(b => { recoverSwap(bucketDir(b)); recoverSwap(partDir(b)) })
-
-    def exists: Boolean = Files.exists(root) && existingBuckets.nonEmpty
-
-    private def existingBuckets: Seq[Int] =
-      if (!Files.exists(root)) Nil
-      else {
-        val stream = Files.list(root)
-        try {
-          val it = stream.iterator()
-          val bs = scala.collection.mutable.ArrayBuffer[Int]()
-          while (it.hasNext) {
-            val name = it.next().getFileName.toString
-            if (name.matches("b=\\d+")) bs += name.drop(2).toInt
-          }
-          bs.toSeq.sorted
-        } finally stream.close()
-      }
-
-    def load(): Option[DataFrame] = loadBuckets(existingBuckets)
-
-    def loadBuckets(bs: Seq[Int]): Option[DataFrame] = {
-      val dirs = bs.map(bucketDir).filter(Files.exists(_)).map(_.toString)
-      if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
-    }
-
-    def merge(changes: DataFrame, tsCol: String, tieBreak: Seq[String] = Nil): Unit = {
-      val reduced = ApplyChanges.latestPerKey(changes, keys, col(tsCol),
-          tieBreak.map(col))
-        .withColumn("_b", bucketExpr)
-        .persist()
-      try {
-        // the only driver-side data: the distinct bucket ids (≤ numBuckets ints)
-        val touched = reduced.select("_b").distinct().collect().map(_.getInt(0)).toSeq.sorted
-        val existing = loadBuckets(touched.filter(b => Files.exists(bucketDir(b))))
-        val next = existing match {
-          case Some(snap) =>
-            ApplyChanges.mergeIntoSnapshot(snap.withColumn("_b", bucketExpr),
-              reduced, keys :+ "_b")
-          case None => reduced.where(lower(col("action")) =!= "delete")
-        }
-        val cols = next.columns.toSeq
-          .filterNot(c => c == "_b" || c == "action").map(col)
-        writePartitioned(next.select((cols :+ col("_b")): _*), root, touched)
-        lastTouched = touched
-        staleSinceTotals ++= touched
-      } finally reduced.unpersist()
-    }
-
-    def writeTotals(totalsPath: String, groupCol: String, valueCol: String): Unit = {
-      // refresh partials for every bucket touched since the last
-      // totals write; a fresh instance (or missing partials) refreshes
-      // everything — on-disk partials of unknown provenance are not
-      // trusted
-      val stale =
-        if (Files.exists(partsRoot) && partialsKnownFresh) staleSinceTotals.toSeq.sorted
-        else existingBuckets
-      if (stale.nonEmpty) {
-        val parts = loadBuckets(stale.filter(b => Files.exists(bucketDir(b)))) match {
-          case Some(df) => df.withColumn("_b", bucketExpr)
-            .groupBy(col("_b"), col(groupCol))
-            .agg(sum(col(valueCol)).as("_sum"), count(lit(1)).as("_n"))
-          case None => spark.emptyDataFrame
-        }
-        if (!parts.isEmpty) writePartitioned(parts, partsRoot, stale)
-        else stale.foreach(b => deleteRecursive(partDir(b)))
-        staleSinceTotals = Set.empty
-        partialsKnownFresh = true
-      }
-      // final totals: |buckets|×|groups| partial rows, never the snapshot
-      val dirs = existingBuckets.map(partDir).filter(Files.exists(_)).map(_.toString)
-      val totals =
-        if (dirs.nonEmpty) Some(spark.read.parquet(dirs: _*)
-          .groupBy(col(groupCol))
-          .agg(sum(col("_sum")).as("total_salary"), sum(col("_n")).as("n_emps")))
-        // every key deleted: the previous table's columns, no rows
-        else if (Files.exists(Paths.get(totalsPath))) Some(spark.read.parquet(totalsPath).limit(0))
-        else None
-      totals.foreach { df =>
-        val tmp = Paths.get(totalsPath + ".tmp")
-        deleteRecursive(tmp)
-        df.write.parquet(tmp.toString)
-        swapInto(Paths.get(totalsPath), tmp)
-      }
-    }
-
-    /** One partitioned write of `df` (which holds only `touched`
-      * buckets' rows), then per-bucket atomic swap. A touched bucket
-      * with no surviving rows (all keys deleted) is removed, together
-      * with any `.old` copy that [[recoverSwap]] would bring back. */
-    private def writePartitioned(df: DataFrame, target: Path, touched: Seq[Int]): Unit = {
-      val tmp = Paths.get(target.toString + ".tmp")
-      deleteRecursive(tmp)
-      df.write.partitionBy("_b").parquet(tmp.toString)
-      Files.createDirectories(target)
-      touched.foreach { b =>
-        val fresh = tmp.resolve(s"_b=$b")
-        val dest = target.resolve(s"b=$b")
-        if (Files.exists(fresh)) swapInto(dest, fresh)
-        else { deleteRecursive(oldOf(dest)); deleteRecursive(dest) }
-      }
-      deleteRecursive(tmp)
     }
   }
 
@@ -337,13 +196,4 @@ object Sinks {
       }
     }
   }
-
-  /** K1/K2: Kafka keyed-JSON sink options (producer.py:10-13 semantics:
-    * acks=all, flush per batch). Use with a `key`/`value` DataFrame from
-    * [[graft.cdc.CdcWire.toWire]] when the connector jar is present.
-    */
-  def kafkaSinkOptions(servers: String, topic: String): Map[String, String] = Map(
-    "kafka.bootstrap.servers" -> servers,
-    "topic" -> topic,
-    "kafka.acks" -> "all")
 }

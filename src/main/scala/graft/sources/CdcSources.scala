@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * bounded bursts (S2, consumer.py:21-37), and a CSV file (S3, pdf p.3).
   * On Spark all three become declarative reads; the watermark state is
   * subsumed by streaming checkpoints (offsets), and the bounded burst
-  * by `Trigger.AvailableNow` + `maxFilesPerTrigger`/`maxOffsetsPerTrigger`.
+  * by `Trigger.AvailableNow` + `maxFilesPerTrigger`.
   */
 object CdcSources {
 
@@ -97,14 +97,4 @@ object CdcSources {
     spark.read.format("binaryFile")
       .option("pathGlobFilter", glob)
       .load(dir)
-
-  /** Kafka source options the reference uses (consumer.py:11-19), for
-    * when the spark-sql-kafka connector is on the classpath. Kept as
-    * data so tests don't need the jar.
-    */
-  def kafkaSourceOptions(servers: String, topic: String, maxOffsetsPerTrigger: Long = 100): Map[String, String] = Map(
-    "kafka.bootstrap.servers" -> servers,
-    "subscribe" -> topic,
-    "startingOffsets" -> "earliest",             // auto.offset.reset=earliest
-    "maxOffsetsPerTrigger" -> maxOffsetsPerTrigger.toString) // burst cap 50/100
 }

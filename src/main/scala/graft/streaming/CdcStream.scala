@@ -27,10 +27,15 @@ import graft.sinks.Sinks.{SnapshotStore, recoverSwap}
   * commit-before-write loss window (§2.9): with checkpointing, a
   * crashed batch replays and the keyed merge is idempotent.
   *
-  * Scale: the only shuffle per batch is the latest-per-key window keyed
-  * by emp_id inside `store.merge`; DLQ and corrupt branches are
-  * narrow filters appended columnar-ly. State lives in the snapshot
-  * store, not the driver.
+  * Scale: with a snapshot in place, one batch plans three shuffle
+  * exchanges (counted in the executed plans): the latest-per-key
+  * window by emp_id inside `store.merge` (pre-reduced map-side by
+  * `WindowGroupLimit`), the snapshot side of the full-outer merge join
+  * by emp_id (the batch side reuses the window's partitioning), and
+  * the totals `groupBy` by emp_city after a map-side partial
+  * aggregate. The first batch has no snapshot to join, so two. DLQ and
+  * corrupt branches are narrow filters over the persisted batch. State
+  * lives in the snapshot store, not the driver.
   */
 object CdcStream {
 
@@ -75,9 +80,7 @@ object CdcStream {
     * totals, the project-1 A4 analog): derived from the merged snapshot
     * state rather than accumulated from the raw stream, so deletes and
     * updates retract correctly (SURVEY §7.5 risk 1 — plain streaming
-    * groupBy cannot retract). How much work that takes is the store's
-    * choice: the simple store re-aggregates, the bucketed store updates
-    * per-bucket partials for touched buckets only.
+    * groupBy cannot retract): the store re-aggregates its snapshot.
     *
     * `batchId` must be unique per batch (streaming supplies the
     * checkpointed epoch): the DLQ write is `overwrite` into a

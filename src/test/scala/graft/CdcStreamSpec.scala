@@ -21,12 +21,6 @@ class CdcStreamSpec extends SparkSpec {
     goldenStreamingRun(root => new ParquetSnapshotStore(spark, s"$root/snapshot", Seq("emp_id")))
   }
 
-  test("golden streaming run against the bucketed snapshot store") {
-    goldenStreamingRun(root =>
-      new graft.sinks.Sinks.BucketedSnapshotStore(spark, s"$root/snapshot",
-        Seq("emp_id"), numBuckets = 4))
-  }
-
   private def goldenStreamingRun(
       mkStore: String => graft.sinks.Sinks.SnapshotStore): Unit = {
     val root = Files.createTempDirectory("cdcstream").toString
