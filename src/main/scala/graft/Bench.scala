@@ -39,30 +39,6 @@ object Bench {
       .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Stage-level attribution: wall-clock alone can't distinguish a
-    // query that does more work from one that hit a noisy-neighbor
-    // stall (this host swings 1.2-2× between identical runs, and
-    // round verdicts have repeatedly burned turns re-auditing noise,
-    // e.g. dedup_containment 1.62→2.30 s on unchanged code in r10).
-    // The listener accumulates executor-side metrics; per query we
-    // snapshot the delta and, for residents, print a [bench-stages]
-    // stderr line. executorRunTime ≈ wall×cores means real work;
-    // wall inflated over a flat executorRunTime means the host.
-    val stageStats = new java.util.concurrent.atomic.AtomicLongArray(5)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          stageStats.addAndGet(0, 1L)
-          stageStats.addAndGet(1, m.executorRunTime)
-          stageStats.addAndGet(2, m.shuffleReadMetrics.totalBytesRead)
-          stageStats.addAndGet(3, m.shuffleWriteMetrics.bytesWritten)
-          stageStats.addAndGet(4, m.memoryBytesSpilled + m.diskBytesSpilled)
-        }
-      }
-    })
-    def stageSnap(): Array[Long] = Array.tabulate(5)(stageStats.get)
     val rt = Runtime.getRuntime
     def once(name: String): Double = {
       // attribution for any [memo-build] line this run triggers: shared
@@ -77,46 +53,19 @@ object Bench {
       catch { case scala.util.control.NonFatal(_) => return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
-    // stage-completed events post to an ASYNC listener bus: without a
-    // drain, a run's tail events can land in the NEXT run's delta and
-    // misattribute metrics between the back-to-back runs below. The
-    // drain API is private[spark], so reflection with a no-op fallback
-    // (diagnostics degrade gracefully; timings are unaffected)
-    val drainListeners: () => Unit =
-      try {
-        val sc = spark.sparkContext
-        val busM = sc.getClass.getMethod("listenerBus")
-        val bus = busM.invoke(sc)
-        val waitM = bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        // NonFatal-only, same convention as `once`: an interrupt or a
-        // dying JVM must still stop the bench loudly — the interrupt
-        // flag is restored so the shutdown propagates
-        () => {
-          try waitM.invoke(bus, Long.box(10000L))
-          catch {
-            case e: java.lang.reflect.InvocationTargetException
-                if e.getCause.isInstanceOf[InterruptedException] =>
-              Thread.currentThread().interrupt()
-            case scala.util.control.NonFatal(_) => ()
-          }
-          ()
-        }
-      } catch { case scala.util.control.NonFatal(_) => () => () }
-    // every run carries its own stage-metric + GC delta, so the
-    // attribution below can come from the MINIMUM-wall run instead of
-    // a dedicated extra execution — r15's stage tuples occasionally
-    // caught a noisy-neighbor spike in that extra slot (temporal_reach
-    // attributed 10.99 s against a 2.05 s min) and overstated the
-    // heaviest queries 5×
-    def onceWithStages(name: String): (Double, Array[Long], Long) = {
-      drainListeners()
-      val s0 = stageSnap()
+    // Stage-level attribution: wall-clock alone can't tell a query that
+    // does more work from one that hit a noisy-neighbor stall (this host
+    // swings 1.2-2× between identical runs; dedup_containment 1.62→2.30 s
+    // on unchanged code in r10). executorRunTime ≈ wall×cores means real
+    // work; wall inflated over a flat executorRunTime means the host.
+    // Every run records its own stages + GC delta, so the attribution
+    // below comes from the MINIMUM-wall run, not an extra execution that
+    // can catch a spike (r15: temporal_reach 10.99 s against a 2.05 s min).
+    def onceWithStages(name: String): (Double, Seq[Capture.Stage], Long) = {
       val (_, g0) = gcStats()
-      val t = once(name)
-      drainListeners()
+      val (t, ss) = Capture.stages(spark)(once(name))
       val (_, g1) = gcStats()
-      val s1 = stageSnap()
-      (t, s1.zip(s0).map { case (a, b) => a - b }, g1 - g0)
+      (t, ss, g1 - g0)
     }
     def cleanup(): Unit = {
       spark.catalog.clearCache()
@@ -155,19 +104,22 @@ object Bench {
         // the one least polluted by host noise, and the same number
         // the per-query timing reports, so the stage tuple's wall can
         // no longer overstate the query against its own min
-        val (attributed, d, gcMs) = first.minBy(_._1)
+        val (attributed, ss, gcMs) = first.minBy(_._1)
+        val execSec = ss.map(_.execMs).sum / 1e3
+        val shufReadMb = ss.map(_.shufReadBytes).sum / 1e6
+        val spillMb = ss.map(_.spillBytes).sum / 1e6
         // gcMs rides the tuple so the parsed artifact can separate
         // heap/contention stalls from plan regressions: wall inflated
         // over flat execSec + high gcMs = the host or the heap, not
         // the query (VERDICT r13: identical-code queries swung 2-4x)
         System.err.println(
-          f"[bench-stages] $name%-24s wall=$attributed%6.2fs stages=${d(0)}%3d " +
-            f"execSec=${d(1) / 1e3}%8.2f shufReadMb=${d(2) / 1e6}%7.1f " +
-            f"shufWriteMb=${d(3) / 1e6}%7.1f spillMb=${d(4) / 1e6}%7.1f " +
+          f"[bench-stages] $name%-24s wall=$attributed%6.2fs stages=${ss.size}%3d " +
+            f"execSec=$execSec%8.2f shufReadMb=$shufReadMb%7.1f " +
+            f"shufWriteMb=${ss.map(_.shufWriteBytes).sum / 1e6}%7.1f spillMb=$spillMb%7.1f " +
             f"gcMs=$gcMs%5d")
         residentStages += name -> String.format(java.util.Locale.ROOT,
-          "[%.2f,%d,%.2f,%.1f,%.1f,%d]", Double.box(attributed), Long.box(d(0)),
-          Double.box(d(1) / 1e3), Double.box(d(2) / 1e6), Double.box(d(4) / 1e6),
+          "[%.2f,%d,%.2f,%.1f,%.1f,%d]", Double.box(attributed), Int.box(ss.size),
+          Double.box(execSec), Double.box(shufReadMb), Double.box(spillMb),
           Long.box(gcMs))
       }
       cleanup()

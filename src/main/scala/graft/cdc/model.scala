@@ -40,18 +40,6 @@ object CdcWire {
     StructField("action", StringType),
     StructField("last_updated_at", StringType)))
 
-  /** Typed schema after parsing/casting (§1.2 of SURVEY.md). */
-  val eventSchema: StructType = StructType(Seq(
-    StructField("action_id", IntegerType),
-    StructField("emp_id", LongType),
-    StructField("emp_FN", StringType),
-    StructField("emp_LN", StringType),
-    StructField("emp_dob", StringType),
-    StructField("emp_city", StringType),
-    StructField("emp_salary", LongType),
-    StructField("action", StringType),
-    StructField("last_updated_at", TimestampType)))
-
   /** Serialize typed events to the keyed-JSON wire format (K1 sink shape):
     * key = stringified emp_id (producer.py:69), value = JSON object with
     * all fields stringified (producer.py:50-65). One `to_json` call —

@@ -76,22 +76,10 @@ object AnnCache {
     }
   }
 
-  /** Schema-only consumers (the `Dev schemas` sweep) flip this off so
-    * building a query's DataFrame stops EXECUTING it: an eager
-    * localCheckpoint pin materializes at construction time, which
-    * turned the human-readable schema sweep into a full benchmark-cost
-    * run per pinned query (r19 advice). Lazy pins keep the identical
-    * plan and single-materialization guarantee — the checkpoint just
-    * happens at the first ACTION instead of at build — so execution
-    * paths (driver, bench, tests) leave this at the eager default,
-    * where construction-time materialization keeps per-query cost
-    * attribution honest. */
-  @volatile var eagerPins: Boolean = true
-
   /** Materialize an index component or a query's shared frame so it
     * survives inter-query cache hygiene and carries no build lineage;
     * the query builders call it mid-chain (`.transform(AnnCache.pin)`). */
-  def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = eagerPins)
+  def pin(df: DataFrame): DataFrame = df.localCheckpoint()
 
   /** Merge a pinned frame's checkpoint partitions to a data-scaled
     * read width (a partition merge, no shuffle): a localCheckpoint
@@ -104,12 +92,9 @@ object AnnCache {
     * rows-per-task discipline (Graph.RelaxEdgeRowsPerTask): fixture
     * frames merge to a handful of tasks, a 100 TB frame still reads
     * at full width. The count is one bounded scan of the
-    * already-materialized checkpoint. Lazy-pin mode (schema-only
-    * sweeps) skips it so building the frame stays non-executing;
-    * execution paths are always eager. */
+    * already-materialized checkpoint. */
   def scaledRead(df: DataFrame, rowsPerTask: Long = 2000000L): DataFrame =
-    if (!eagerPins) df
-    else df.coalesce(math.max(1L, math.min(df.rdd.getNumPartitions.toLong,
+    df.coalesce(math.max(1L, math.min(df.rdd.getNumPartitions.toLong,
       df.count() / rowsPerTask + 1L)).toInt)
 
   /** Drop every cached index (test hygiene). */

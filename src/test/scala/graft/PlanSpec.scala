@@ -850,66 +850,39 @@ class PlanSpec extends SparkSpec {
     assert("FileScan parquet".r.findAllIn(p).length == 1, "one scan")
   }
 
+  /** Executed-plan strings of every SQL action run inside `f` — the
+    * pin builds and iterative rounds a final-plan string can't see. */
+  private def executedPlans(f: => Unit): Seq[String] =
+    Capture.plans(spark)(f)._2.map(_.executedPlan.toString)
+
   test("bfsHops: every frontier expansion is semi/anti keyed, never cartesian") {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(name: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      override def onFailure(name: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val captured = executedPlans {
       val edges = (1 to 40).map(i => (i.toLong, (i * 3 % 41).toLong)).toDF("a", "b")
       graft.ops.Graph.bfsHops(edges, Seq(1L, 2L).toDF("v"), 3).count()
-      // listener bus is async — wait for the level plans to land
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (System.nanoTime() < deadline &&
-        !plans.asScala.exists(_.contains("LeftSemi"))) Thread.sleep(50)
-      val captured = plans.asScala.toSeq
-      assert(captured.exists(_.contains("LeftSemi")),
-        "frontier expansion must probe edges via a semi join")
-      assert(captured.exists(_.contains("LeftAnti")),
-        "visited set must prune via an anti join")
-      assert(!captured.exists(_.contains("CartesianProduct")) &&
-        !captured.exists(_.contains("BroadcastNestedLoopJoin")),
-        "no level may degenerate to an unkeyed join")
-    } finally spark.listenerManager.unregister(listener)
+    }
+    assert(captured.exists(_.contains("LeftSemi")),
+      "frontier expansion must probe edges via a semi join")
+    assert(captured.exists(_.contains("LeftAnti")),
+      "visited set must prune via an anti join")
+    assert(!captured.exists(_.contains("CartesianProduct")) &&
+      !captured.exists(_.contains("BroadcastNestedLoopJoin")),
+      "no level may degenerate to an unkeyed join")
   }
 
   test("temporalReach: every relaxation round joins on the node key, never cartesian") {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(name: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      override def onFailure(name: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val captured = executedPlans {
       val edges = (1 to 60).map(i =>
         (i.toLong, (i * 7 % 61).toLong, (i % 9).toLong)).toDF("a", "b", "t")
       graft.ops.Graph.temporalReach(edges, Seq((1L, 0L), (2L, 3L)).toDF("v", "t0"), 3)
         .count()
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (System.nanoTime() < deadline &&
-        !plans.asScala.exists(p => p.contains("Join") && p.contains("FullOuter")))
-        Thread.sleep(50)
-      val captured = plans.asScala.toSeq
-      assert(captured.exists(_.contains("FullOuter")),
-        "the arrival merge must be a keyed full-outer join")
-      assert(!captured.exists(_.contains("CartesianProduct")) &&
-        !captured.exists(_.contains("BroadcastNestedLoopJoin")),
-        "the time predicate must ride a keyed join, not an unkeyed one")
-    } finally spark.listenerManager.unregister(listener)
+    }
+    assert(captured.exists(_.contains("FullOuter")),
+      "the arrival merge must be a keyed full-outer join")
+    assert(!captured.exists(_.contains("CartesianProduct")) &&
+      !captured.exists(_.contains("BroadcastNestedLoopJoin")),
+      "the time predicate must ride a keyed join, not an unkeyed one")
   }
 
   test("events_error_label: one user-keyed exchange feeds the window, no join") {
@@ -1207,25 +1180,8 @@ class PlanSpec extends SparkSpec {
   /** Total shuffle-write records across every job run inside `f` —
     * the runtime pin for the reach family, whose per-round work hides
     * in eager-checkpoint jobs a final-plan string can't see. */
-  private def shuffledRecords(f: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        acc.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      f
-      // listener bus is async — drain before reading the counter
-      val deadline = System.nanoTime() + 10e9.toLong
-      var last = -1L
-      while (System.nanoTime() < deadline && acc.get() != last) {
-        last = acc.get(); Thread.sleep(200)
-      }
-      acc.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def shuffledRecords(f: => Unit): Long =
+    Capture.stages(spark)(f)._2.map(_.shufWriteRows).sum
 
   test("temporalReach small graph: edge rows never cross a shuffle") {
     import spark.implicits._
