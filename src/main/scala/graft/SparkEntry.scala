@@ -1716,8 +1716,8 @@ object SparkEntry {
         |       emp_salary <= 100 AS bad_salary,
         |       emp_id < 0 AS bad_id
         |FROM cdc_log
-        |WHERE COALESCE(TRY_CAST(substr(emp_dob, 1, 4) AS INT), 0) <= 2007
-        |      OR emp_salary <= 100 OR emp_id < 0
+        |WHERE COALESCE(COALESCE(TRY_CAST(substr(emp_dob, 1, 4) AS INT), 0) <= 2007
+        |      OR emp_salary <= 100 OR emp_id < 0, TRUE)
         |ORDER BY emp_id, event_id""".stripMargin),
 
     "cdc_dedup_first" -> (L +

@@ -62,19 +62,24 @@ object CdcWire {
     * null struct → caller routes to DLQ (strictly better than the
     * reference's print-and-drop, consumer.py:95-96; intent per
     * kafka_project_instruction.pdf p.14).
+    *
+    * Field casts are `try_cast`: a field that does not parse (say
+    * `"emp_salary":"abc"`) reads as NULL, which the validation split
+    * routes to the DLQ. A plain cast throws `CAST_INVALID_INPUT` under
+    * ANSI mode and kills the stream on one bad message.
     */
   def fromWire(wire: DataFrame, valueCol: String = "value"): DataFrame = {
     val parsed = wire.withColumn("_j", from_json(col(valueCol).cast("string"), jsonSchema))
     parsed.select(
-      col("_j.action_id").cast(IntegerType).as("action_id"),
-      col("_j.emp_id").cast(LongType).as("emp_id"),
+      col("_j.action_id").try_cast(IntegerType).as("action_id"),
+      col("_j.emp_id").try_cast(LongType).as("emp_id"),
       col("_j.emp_FN").as("emp_FN"),
       col("_j.emp_LN").as("emp_LN"),
       col("_j.emp_dob").as("emp_dob"),
       col("_j.emp_city").as("emp_city"),
-      col("_j.emp_salary").cast(LongType).as("emp_salary"),
+      col("_j.emp_salary").try_cast(LongType).as("emp_salary"),
       lower(col("_j.action")).as("action"), // P5: lowercased before dispatch (consumer.py:44)
-      col("_j.last_updated_at").cast(TimestampType).as("last_updated_at"),
+      col("_j.last_updated_at").try_cast(TimestampType).as("last_updated_at"),
       // PERMISSIVE from_json yields an all-null struct (not a null
       // struct) for garbage input — a real message always carries
       // emp_id and action, so both-null means undecodable.

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.cdc.{CdcEvent, CdcWire}
 import graft.sinks.Sinks.ParquetSnapshotStore
 import graft.streaming.CdcStream
+import graft.cdc.Routing.Counts
 
 /** Streaming pipeline: wire JSON files → decode → split → DLQ + snapshot
   * merge, via the real `writeStream.foreachBatch` path with
@@ -135,6 +136,78 @@ class CdcStreamSpec extends SparkSpec {
     CdcStream.applyBatch(batch, store, s"$root/dlq", None, batchId = 0L)
     assert(store.load().get.select("emp_id").as[Long].collect().toSeq === Seq(1L))
     assert(spark.read.parquet(s"$root/dlq_corrupt").count() === 1)
+  }
+
+  /** A wire message's JSON value; `salary = None` leaves the field out. */
+  private def message(id: Long, dob: String, salary: Option[String], sec: Int): String =
+    s"""{"action_id":"0","emp_id":"$id","emp_FN":"F$id","emp_LN":"L$id",""" +
+      s""""emp_dob":"$dob","emp_city":"c${id % 5}",""" +
+      salary.fold("")(v => s""""emp_salary":"$v",""") +
+      f""""action":"insert","last_updated_at":"2024-01-01 00:00:$sec%02d"}"""
+
+  private def wireBatch(values: Seq[String]) =
+    values.zipWithIndex.map { case (v, i) => (i.toString, v) }.toDF("key", "value")
+
+  private def rows(dir: String): Long =
+    if (Files.exists(java.nio.file.Paths.get(dir))) spark.read.parquet(dir).count() else 0L
+
+  test("routing is total: a missing or unparseable salary commits to the DLQ") {
+    val root = Files.createTempDirectory("cdcpoison").toString
+    val wireDir = java.nio.file.Paths.get(s"$root/wire")
+    Files.createDirectories(wireDir)
+    // no emp_salary: F2 is SQL NULL for it (dob and id pass); "abc":
+    // a plain cast of it throws CAST_INVALID_INPUT under ANSI mode
+    val burst = wireBatch(Seq(message(1, "2012-01-01", Some("5000"), 1),
+      message(2, "2012-01-01", None, 2), message(3, "2012-01-01", Some("abc"), 3)))
+      .select(to_json(struct(col("key"), col("value")))).as[String].collect()
+    Files.write(wireDir.resolve("b1.json"), String.join("\n", burst: _*).getBytes)
+    val store = new ParquetSnapshotStore(spark, s"$root/snap", Seq("emp_id"))
+    val q = CdcStream.start(graft.sources.CdcSources.wireJsonStream(spark, wireDir.toString),
+      store, s"$root/dlq", s"$root/ckpt")
+    q.awaitTermination(120000)
+    assert(q.exception.isEmpty, s"the stream died: ${q.exception}")
+    assert(Files.exists(java.nio.file.Paths.get(s"$root/ckpt/commits/0")), "burst not committed")
+    assert(store.load().get.select("emp_id").as[Long].collect().toSeq === Seq(1L))
+    val dlq = spark.read.parquet(s"$root/dlq")
+    assert(dlq.select("emp_id").as[Long].collect().toSet === Set(2L, 3L))
+    assert(dlq.where(col("emp_salary").isNotNull).count() === 0)
+  }
+
+  /** A 100-event batch: ids `from` .. `from + 99`, every fourth with a
+    * 1990 dob (DLQ), so a quarter fails validation like the CDC log. */
+  private def hundred(from: Long): Seq[String] =
+    (0 until 100).map { i =>
+      message(from + i, if (i % 4 == 0) "1990-01-01" else "2012-01-01", Some(s"${5000 + i}"), i % 60)
+    }
+
+  test("applyBatch's branch counts reconcile with the wire count") {
+    val root = Files.createTempDirectory("cdccounts").toString
+    val store = new ParquetSnapshotStore(spark, s"$root/snap", Seq("emp_id"))
+    val dlq = s"$root/dlq"
+    // 97 events, a corrupt line, a salary-less and an unparseable one
+    val values = hundred(1).take(97) ++ Seq("not json",
+      message(901, "2012-01-01", None, 1), message(902, "2012-01-01", Some("abc"), 2))
+    val n = CdcStream.applyBatch(wireBatch(values), store, dlq, Some(s"$root/totals"), 0L)
+    assert(n.wire === values.size.toLong)
+    assert(n === Counts(corrupt = 1, invalid = 25 + 2, valid = 72), s"counts $n")
+    assert(rows(s"${dlq}_corrupt/batch=0") === n.corrupt)
+    assert(rows(s"$dlq/batch=0") === n.invalid)
+    assert(store.load().get.count() === n.valid)
+  }
+
+  test("a warm applyBatch with DLQ rows, totals and a snapshot runs 7 stages") {
+    val root = Files.createTempDirectory("cdcstages").toString
+    val store = new ParquetSnapshotStore(spark, s"$root/snap", Seq("emp_id"))
+    def apply(from: Long, id: Long): Counts = CdcStream.applyBatch(wireBatch(hundred(from)),
+      store, s"$root/dlq", Some(s"$root/totals"), id)
+    apply(1, 0L)
+    // one routing job, the DLQ write, the merge (window shuffle,
+    // snapshot shuffle, join + write) and totals (shuffle, write). The
+    // three isEmpty probes the routing job replaced ran two stages
+    // each: 12 stages
+    val (n, stages) = Capture.stages(spark)(apply(51, 1L))
+    assert(n === Counts(corrupt = 0, invalid = 25, valid = 75))
+    assert(stages.size === 7, stages.map(_.name).mkString("stages: ", "; ", ""))
   }
 
   test("wire codec round-trips all fields (P2/P3)") {
