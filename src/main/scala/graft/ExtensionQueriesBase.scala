@@ -130,24 +130,24 @@ private[graft] trait ExtensionQueriesBase {
     * would re-run the iterative fixpoint for an identical answer.
     * (`dedup_clusters_star` keeps its own memo below: its point is
     * exercising the structurally different star-contraction fixpoint
-    * against the same oracle.) */
+    * against the same oracle.) No pin of its own: the labels are a
+    * projection of the label loop's last eager checkpoint. */
   protected def dedupComponents(s: SparkSession, dir: String): DataFrame =
     graft.ops.AnnCache.memo(s, s"dedup-comp:$dir") {
-      graft.ops.AnnCache.scaledRead(graft.ops.AnnCache.pin(
-        graft.ops.Components.connectedComponents(
-          dedupPairs(s, dir).select("doc_a", "doc_b"))))
+      graft.ops.AnnCache.scaledRead(graft.ops.Components.connectedComponents(
+        dedupPairs(s, dir).select("doc_a", "doc_b")))
     }
 
   /** [[dedupComponents]]'s Large-Star/Small-Star twin — the same
     * cluster artifact through the O(log² n) fixpoint, memoized under
     * its own key so the build (the honest star cost) runs once per
     * session and every re-read is an index scan, exactly like the
-    * label-prop labels and the ANN indexes. */
+    * label-prop labels and the ANN indexes. The star fixpoint's output
+    * is already an eager checkpoint, so it is not pinned again. */
   protected def dedupComponentsStar(s: SparkSession, dir: String): DataFrame =
     graft.ops.AnnCache.memo(s, s"dedup-comp-star:$dir") {
-      graft.ops.AnnCache.scaledRead(graft.ops.AnnCache.pin(
-        graft.ops.Components.connectedComponentsStar(
-          dedupPairs(s, dir).select("doc_a", "doc_b"))))
+      graft.ops.AnnCache.scaledRead(graft.ops.Components.connectedComponentsStar(
+        dedupPairs(s, dir).select("doc_a", "doc_b")))
     }
 
   /** Count-Min sketch frequency certificates over the exact top-20 —

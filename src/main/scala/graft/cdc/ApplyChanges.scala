@@ -42,42 +42,19 @@ object ApplyChanges {
       .drop("_rn")
   }
 
-  /** A2 (log form): fold a whole change log into the final snapshot.
-    * Latest event per key wins; a final `delete` removes the key
-    * (consumer.py:70-91 applied transitively). One shuffle on the key.
+  /** A snapshot's visible rows: those whose action is not a delete. */
+  def visible(snapshot: DataFrame): DataFrame =
+    snapshot.where(lower(col("action")) =!= "delete")
+
+  /** A2: fold a whole change log into the final snapshot. Latest event
+    * per key wins; a final `delete` removes the key (consumer.py:70-91
+    * applied transitively). One shuffle on the key. The snapshot store
+    * applies the same rule to stored rows plus each batch
+    * ([[graft.sinks.Sinks.ParquetSnapshotStore.merge]]).
     */
   def applyLog(log: DataFrame, keys: Seq[String], ts: Column,
-               actionCol: Column = col("action"),
                tieBreak: Seq[Column] = Nil): DataFrame =
-    latestPerKey(log, keys, ts, tieBreak)
-      .where(lower(actionCol) =!= "delete")
-
-  /** A2 (incremental form): merge a batch of changes into an existing
-    * snapshot — the `foreachBatch` body of the streaming pipeline.
-    * Full-outer join on the key: change row wins when present unless its
-    * action is `delete`; otherwise the snapshot row survives. Changes
-    * must already be reduced to one row per key (use [[latestPerKey]]).
-    * The join shuffles both sides by the key only.
-    */
-  def mergeIntoSnapshot(snapshot: DataFrame, changes: DataFrame,
-                        keys: Seq[String], actionCol: String = "action"): DataFrame = {
-    val dataCols = snapshot.columns.filterNot(keys.contains)
-    val c = changes.select((keys ++ dataCols :+ actionCol).distinct.map(col): _*)
-    val joined = snapshot.as("t").join(c.as("c"), keys, "full_outer")
-    val isDelete = lower(col(s"c.$actionCol")) === "delete"
-    val useChange = col(s"c.$actionCol").isNotNull && !isDelete
-    val projected = keys.map(col) ++ dataCols.map { d =>
-      when(useChange, col(s"c.$d")).otherwise(col(s"t.$d")).as(d)
-    }
-    joined
-      .where(col(s"c.$actionCol").isNull || !isDelete) // A3: delete drops the key
-      .select(projected: _*)
-  }
-
-  /** A3 standalone: hard delete by key, anti-join formulation
-    * (consumer.py:90-91). */
-  def deleteKeys(snapshot: DataFrame, deletes: DataFrame, keys: Seq[String]): DataFrame =
-    snapshot.join(deletes.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    visible(latestPerKey(log, keys, ts, tieBreak))
 
   /** A2 (strict dispatch form): fold a change log with the reference's
     * *procedural* action semantics (consumer.py:70-91) — insert only if
@@ -95,10 +72,9 @@ object ApplyChanges {
     * coalesce(u, i), or nothing if no insert after the last delete.
     * `ord` must totally order events per key (e.g. a log sequence id).
     */
-  def applyLogDispatch(log: DataFrame, keys: Seq[String], ord: Column,
-                       actionCol: Column = col("action")): DataFrame = {
+  def applyLogDispatch(log: DataFrame, keys: Seq[String], ord: Column): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*)
-    val a = lower(actionCol)
+    val a = lower(col("action"))
     val step1 = log.withColumn("_d", max(when(a === "delete", ord)).over(w))
     val afterDel = step1("_d").isNull || ord > step1("_d")
     val step2 = step1.withColumn("_i",
@@ -131,9 +107,8 @@ object ApplyChanges {
     * logs in ApplyChangesOracleSpec.
     */
   def snapshotDiff(log: DataFrame, keys: Seq[String], ts: Column, t1: Column,
-                   diffCols: Seq[String], actionCol: Column = col("action"),
-                   tieBreak: Seq[Column] = Nil): DataFrame = {
-    val payload = struct((actionCol.as("action") +:
+                   diffCols: Seq[String], tieBreak: Seq[Column] = Nil): DataFrame = {
+    val payload = struct((col("action") +:
       diffCols.map(c => col(c).as(c))): _*)
     val wAsc = Window.partitionBy(keys.map(col): _*)
       .orderBy((ts.asc +: tieBreak.map(_.asc)): _*)

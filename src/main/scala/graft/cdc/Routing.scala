@@ -18,9 +18,10 @@ object Routing {
     def wire: Long = corrupt + invalid + valid
   }
 
-  /** F2 holds: the row is valid. NULL (F2 undecidable) is not valid. */
-  private def isValid(dob: Column, salary: Column, id: Column): Column =
-    !Columns.isInvalid(dob, salary, id)
+  /** F2 holds over the wire's columns: the row is valid. NULL (F2
+    * undecidable) is not valid. */
+  private def isValid: Column =
+    !Columns.isInvalid(col("emp_dob"), col("emp_salary"), col("emp_id"))
 
   /** Split on the reference's F2 predicate, annotating the invalid branch
     * with per-rule flags (the reference's DLQ message carries no reason —
@@ -29,20 +30,16 @@ object Routing {
     * Total: a row F2 cannot decide (a NULL salary or id makes it SQL
     * NULL) goes to the invalid branch, so every row lands in exactly
     * one branch. Its flags say which rule held; all-false/NULL flags
-    * mark an undecidable row.
+    * mark an undecidable row. It reads the predicate [[branchCounts]]
+    * counts with, so the counts reconcile.
     */
-  def validateSplit(events: DataFrame,
-                    dob: Column = col("emp_dob"),
-                    salary: Column = col("emp_salary"),
-                    id: Column = col("emp_id")): Split = {
-    val valid = isValid(dob, salary, id)
+  def validateSplit(events: DataFrame): Split =
     Split(
-      valid = events.where(valid),
-      invalid = events.where(!coalesce(valid, lit(false)))
-        .withColumn("bad_dob", Columns.dobYear(dob) <= 2007)
-        .withColumn("bad_salary", salary <= 100)
-        .withColumn("bad_id", id < 0))
-  }
+      valid = events.where(isValid),
+      invalid = events.where(!coalesce(isValid, lit(false)))
+        .withColumn("bad_dob", Columns.dobYear(col("emp_dob")) <= 2007)
+        .withColumn("bad_salary", col("emp_salary") <= 100)
+        .withColumn("bad_id", col("emp_id") < 0))
 
   /** The branch counts of a [[CdcWire.fromWire]] batch, the split
     * `validateSplit` makes of its non-corrupt rows, in one job with no
@@ -51,7 +48,7 @@ object Routing {
     * under AQE: table-cache stage, shuffle map, result.) */
   def branchCounts(decoded: DataFrame): Counts = {
     val branch = when(col("corrupt"), 0)
-      .when(isValid(col("emp_dob"), col("emp_salary"), col("emp_id")), 2)
+      .when(isValid, 2)
       .otherwise(1)
     val n = decoded.select(branch).queryExecution.toRdd.aggregate(new Array[Long](3))(
       (acc, r: InternalRow) => { acc(r.getInt(0)) += 1; acc },

@@ -68,8 +68,8 @@ object CdcWire {
     * routes to the DLQ. A plain cast throws `CAST_INVALID_INPUT` under
     * ANSI mode and kills the stream on one bad message.
     */
-  def fromWire(wire: DataFrame, valueCol: String = "value"): DataFrame = {
-    val parsed = wire.withColumn("_j", from_json(col(valueCol).cast("string"), jsonSchema))
+  def fromWire(wire: DataFrame): DataFrame = {
+    val parsed = wire.withColumn("_j", from_json(col("value").cast("string"), jsonSchema))
     parsed.select(
       col("_j.action_id").try_cast(IntegerType).as("action_id"),
       col("_j.emp_id").try_cast(LongType).as("emp_id"),

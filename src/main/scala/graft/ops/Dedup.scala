@@ -336,26 +336,14 @@ object Dedup {
     *
     * The shingle table feeds four consumers (signatures, both sides of
     * the verify join, the size counts). Spark's ReuseExchange dedups the
-    * repeated shuffle at execution; `persistShingles` additionally
-    * caches the materialized rows — measured *slower* at fixture scale
-    * (extra materialization beats 3 cheap recomputes) but the right
-    * call on a 100 TB corpus, where you'd persist — or write the
-    * shingle table out bucketed by shingle once per corpus — rather
+    * repeated shuffle at execution; on a 100 TB corpus you would write
+    * the shingle table out bucketed by shingle once per corpus rather
     * than re-scan the raw text four times.
     */
   def minhashNearDups(docs: DataFrame, textCol: Column, idCol: Column,
                       shingleN: Int = 3, bands: Int = 8, rowsPerBand: Int = 4,
-                      num: Int = 1, den: Int = 2, maxBucket: Int = 100,
-                      persistShingles: Boolean = false,
-                      shingles: Option[DataFrame] = None): DataFrame = {
-    // `shingles`: caller-supplied pre-built (doc_id, shingle) table —
-    // the cross-operator sharing shape (one shingle table feeds the
-    // whole dedup family); must equal distinctShingles(docs, shingleN)
-    val base = shingles.getOrElse(
-      Text.distinctShingles(docs, textCol, idCol, shingleN))
-    val sh = if (persistShingles && shingles.isEmpty)
-      base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else base
+                      num: Int = 1, den: Int = 2, maxBucket: Int = 100): DataFrame = {
+    val sh = Text.distinctShingles(docs, textCol, idCol, shingleN)
     // Signatures use the aggregated form, not a per-row higher-order
     // expression over each doc's shingle array: that re-evaluates
     // inside the pair self-join and measured ~9× slower than paying
@@ -679,7 +667,6 @@ object Dedup {
 
   def prefixFilterPairs(docs: DataFrame, textCol: Column, idCol: Column,
                         shingleN: Int = 3, num: Int = 1, den: Int = 2,
-                        persistShingles: Boolean = false,
                         shingles: Option[DataFrame] = None,
                         rankedShingles: Option[DataFrame] = None): DataFrame = {
     require(num > 0 && den >= num, s"threshold $num/$den not in (0,1]")
@@ -687,18 +674,14 @@ object Dedup {
     // shuffle), the shingle table here feeds FIVE consumers behind
     // DIFFERENT shuffle keys (freq, both prefix-join sides, both
     // verify sides) — nothing reuses, so the tokenize+explode pipeline
-    // re-runs per consumer unless materialized. Default OFF, matching
-    // minhashNearDups: the library must not leak a cache entry the
-    // caller has no handle to unpersist; turn it on where inter-query
-    // clearCache hygiene exists (the registered query does). A
-    // caller-supplied `shingles` frame (the family-memo shape)
-    // supersedes both paths; `rankedShingles` additionally skips the
-    // freq/rank scaffold ([[rankShingles]] of the same shingle set).
-    val sh0 = shingles.getOrElse(
+    // re-runs per consumer unless materialized. The library does not
+    // persist it (it must not leak a cache entry the caller has no
+    // handle to unpersist): the registered query passes a pinned
+    // `shingles` frame (the family-memo shape), and `rankedShingles`
+    // additionally skips the freq/rank scaffold ([[rankShingles]] of
+    // the same shingle set).
+    val sh = shingles.getOrElse(
       Text.distinctShingles(docs, textCol, idCol, shingleN))
-    val sh = if (persistShingles && shingles.isEmpty)
-      sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sh0
     val ranked = rankedShingles.getOrElse(rankShingles(sh))
     // L = n − ceil(num·n/den) + 1; ceil(a/b) = (a+b−1) div b, all
     // non-negative so truncating and flooring division agree

@@ -33,13 +33,12 @@ object Ivf {
     * `maxIter` defaults well below Spark ML's 20: a coarse quantizer
     * only needs cells of roughly balanced population, not converged
     * Lloyd's — recall is governed by the probed corpus fraction, and
-    * each extra iteration is a full pass over the training set (on a
-    * real corpus you also bound `sampleFraction`; the centroids are a
-    * sketch, not a model).
+    * each extra iteration is a full pass over the training set (the
+    * centroids are a sketch, not a model).
     */
   def build(corpus: DataFrame, vecCol: Column, idCol: Column,
-            k: Int, seed: Long = 42L, sampleFraction: Double = 1.0,
-            maxIter: Int = 8, metaCols: Seq[(String, Column)] = Nil): Index = {
+            k: Int, seed: Long = 42L, maxIter: Int = 8,
+            metaCols: Seq[(String, Column)] = Nil): Index = {
     // metaCols ride INSIDE the index rows (label, tenant, language …):
     // a filtered search then evaluates its predicate as a scan-stage
     // filter on the pinned index — no join back to the source table,
@@ -47,10 +46,9 @@ object Ivf {
     val feats = corpus.select(idCol.as("vec_id") +: vecCol.as("v") +:
         metaCols.map { case (n, c) => c.as(n) }: _*)
       .withColumn("features", array_to_vector(col("v").cast("array<double>")))
-    val train = if (sampleFraction < 1.0) feats.sample(sampleFraction, seed) else feats
     val model = new KMeans().setK(k).setSeed(seed).setFeaturesCol("features")
       .setMaxIter(maxIter)
-      .fit(train)
+      .fit(feats)
     val assigned = model.transform(feats)
       .select(col("vec_id") +: col("v") +: col("prediction").as("cell") +:
         metaCols.map { case (n, _) => col(n) }: _*)

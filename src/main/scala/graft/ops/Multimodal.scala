@@ -253,21 +253,6 @@ object Multimodal {
     })
   }
 
-  /** (media_id, luma) for the image rows ImageIO can decode — the
-    * distributed form of [[ImageCodec.lumaString]], feeding
-    * [[aHashed]] so real images get real perceptual fingerprints.
-    * Non-decodable rows are dropped (they have no pixels to hash);
-    * route them to a DLQ branch upstream if they must be accounted.
-    */
-  def imageLuma(media: Dataset[MediaRecord]): DataFrame = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(_.flatMap { r =>
-      if (ImageCodec.isImageMime(r.mime))
-        ImageCodec.lumaString(r.payload).map(s => (r.media_id, s))
-      else None
-    }).toDF("media_id", "luma")
-  }
-
   /** Minimal FRAME-CONTAINER for the video path — `GFV1`: magic +
     * big-endian frame count, then length-prefixed PNG frames. This is
     * deliberately OUR OWN trivial container (an MJPEG-style

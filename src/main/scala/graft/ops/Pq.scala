@@ -74,23 +74,19 @@ object Pq {
     * rounds × one shuffle each, independent of m — versus m separate
     * k-means fits each paying its own init/iteration job overhead
     * (measured 6s → ~1.5s for the whole operator at sf0.01). Init
-    * seeds are the k corpus vectors with the smallest id-hash
-    * (sample-stable); a cluster that empties keeps its previous
-    * centroid so the codebook stays dense (ADC's positional lookup
-    * needs every slot). `sampleFraction` bounds the training set at
-    * corpus scale.
+    * seeds are the k corpus vectors with the smallest id-hash; a
+    * cluster that empties keeps its previous centroid so the codebook
+    * stays dense (ADC's positional lookup needs every slot).
     *
-    * Determinism: the TRAINING SET and INIT are partitioning-exact
-    * (id-hash selection), but the Lloyd centroid update averages
-    * doubles, whose summation order follows partitioning — so the
-    * codebook is reproducible in practice yet not bit-stable under
-    * AQE/repartition re-plans. The consumers tolerate that: every PQ
+    * Determinism: the INIT is partitioning-exact (id-hash selection),
+    * but the Lloyd centroid update averages doubles, whose summation
+    * order follows partitioning — so the codebook is reproducible in
+    * practice yet not bit-stable under AQE/repartition re-plans. The consumers tolerate that: every PQ
     * query is rows-only self-checking against exact brute force, and
     * the exact re-rank tail makes the final top-k insensitive to
     * code-boundary wobble. */
   def build(corpus: DataFrame, vecCol: Column, idCol: Column, dim: Int,
-            m: Int = 8, k: Int = 16,
-            sampleFraction: Double = 1.0, maxIter: Int = 4,
+            m: Int = 8, k: Int = 16, maxIter: Int = 4,
             metaCols: Seq[(String, Column)] = Nil): Index = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val spark = corpus.sparkSession
@@ -99,26 +95,18 @@ object Pq {
     // id cast to long up front: seedIds reads getLong, and callers may
     // pass int ids
     val base = corpus.select(idCol.cast("long").as("vec_id"), vecCol.as("v"))
-    // deterministic id-hash sampling, NOT Bernoulli sample(): the
-    // training set must be identical under any partitioning/AQE
-    // re-plan or the codebook (and every ANN result after it) drifts
-    // between runs — the same contract Sampling.hashSample exists for
-    val trainBase =
-      if (sampleFraction < 1.0)
-        base.where(Sampling.hashSample(col("vec_id"),
-          math.round(sampleFraction * Sampling.Buckets).toInt))
-      else base
-    val sl = sliced(trainBase, col("v"), col("vec_id"), m, dsub)
-    // deterministic init: slices of the k smallest-hash vectors
-    val seedIds = trainBase
+    val sl = sliced(base, col("v"), col("vec_id"), m, dsub)
+    // deterministic init: slices of the k smallest-hash vectors, the
+    // same under any partitioning/AQE re-plan
+    val seedIds = base
       .select(col("vec_id"), Sampling.hashVal(col("vec_id")).as("h"))
       .orderBy(col("h"), col("vec_id")).limit(k)
       .collect().map(_.getLong(0)).sorted.zipWithIndex
     // the positional ADC lookup (sub·k + code) requires a FULL codebook:
     // k' < k seeds would silently shift every subspace's table stride
     require(seedIds.length == k,
-      s"PQ training set has ${seedIds.length} vectors but k=$k codes per " +
-        "subspace are required (raise sampleFraction or lower k)")
+      s"PQ corpus has ${seedIds.length} vectors but k=$k codes per " +
+        "subspace are required (lower k)")
     val seedCodes = seedIds.toSeq.toDF("vec_id", "code")
     // the codebook lives driver-side between rounds (bounded m×k×dsub
     // metadata, exactly what an ML model holds), truncating the

@@ -40,27 +40,6 @@ object Skew {
         col(as)): _*)
   }
 
-  /** Salted two-stage aggregation for additive aggregates whose payload
-    * per group is heavy (e.g. building large per-group structures):
-    * stage 1 aggregates (group, salt) buckets, stage 2 merges buckets.
-    * For plain sum/count Spark's partial aggregation already does this;
-    * the explicit form exists for aggregates without a map-side
-    * combiner.
-    */
-  def saltedSum(df: DataFrame, groupCols: Seq[Column], value: Column,
-                salts: Int, as: String = "total"): DataFrame =
-    // salt = hash(value) + partition id: the value hash spreads hot
-    // groups with varying payloads, the partition id spreads the
-    // constant-value hot group (the canonical skew case — hash(value)
-    // alone maps it to ONE reducer). Both inputs are stable under task
-    // retry (a retried task re-reads the same split), and the sum is
-    // salt-invariant regardless.
-    df.withColumn("_salt", pmod(hash(value) + spark_partition_id(), lit(salts)))
-      .groupBy((groupCols :+ col("_salt")): _*)
-      .agg(sum(value).as("_partial"))
-      .groupBy(groupCols: _*)
-      .agg(sum(col("_partial")).as(as))
-
   /** Equi-join immune to PROBE-side key skew, for when AQE's skew-join
     * split can't apply (the skewed exchange feeds a co-grouped
     * window/agg, or the build side is just over the broadcast budget):

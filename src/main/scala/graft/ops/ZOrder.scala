@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) clustering — multi-dimensional data layout for
@@ -14,11 +14,8 @@ import org.apache.spark.sql.functions._
   * skip within files).
   *
   * Scale shape: the z key is pure per-row bit arithmetic inside
-  * whole-stage codegen (no shuffle added beyond the layout's own
-  * range partitioning, which a rewrite pays once); the manifest is
-  * one aggregation grouped by file; skip decisions read only the
-  * manifest — the planner never touches data. ZOrderSpec demonstrates
-  * the actual skip ratio on a written layout vs an unclustered one.
+  * whole-stage codegen, no shuffle (`events_zorder_key` computes it;
+  * a layout rewrite range-partitions and sorts by it).
   */
 object ZOrder {
 
@@ -54,37 +51,4 @@ object ZOrder {
   /** DuckDB mirror of [[zValue]] for oracle parity. */
   def zValueSql(a: String, b: String, bits: Int = 16): String =
     zValueNSql(Seq(a, b), bits)
-
-  /** Rewrite `df` into `n` z-clustered slices: range-partition by the
-    * interleaved key, sort within each slice so parquet row-group
-    * stats are tight too, then DROP the key — the written files keep
-    * the input schema (like OPTIMIZE ZORDER, the clustering key is
-    * layout, not data; the projection preserves partitioning and
-    * intra-partition order). Write the result with any file sink;
-    * pair with [[manifest]] for skip decisions. */
-  def layout(df: DataFrame, a: Column, b: Column, n: Int,
-             bits: Int = 16): DataFrame = {
-    // collision-proof internal name: a user column named "z" must
-    // survive the layout rewrite untouched
-    val zk = "__graft_z"
-    df.withColumn(zk, zValue(a, b, bits))
-      .repartitionByRange(n, col(zk))
-      .sortWithinPartitions(col(zk))
-      .drop(zk)
-  }
-
-  /** Per-file min/max manifest over `dims` — the stats a box-predicate
-    * planner consults to skip files. One aggregation, grouped by file. */
-  def manifest(df: DataFrame, dims: Seq[String]): DataFrame =
-    df.withColumn("_file", input_file_name())
-      .groupBy(col("_file"))
-      .agg(count(lit(1)).as("rows"),
-        dims.flatMap(d => Seq(min(col(d)).as(s"min_$d"), max(col(d)).as(s"max_$d"))): _*)
-
-  /** Files whose min/max box intersects `[lo, hi]` on every dim —
-    * i.e. the files a pruning scan must actually read. */
-  def filesForBox(man: DataFrame, box: Map[String, (Long, Long)]): DataFrame =
-    box.foldLeft(man) { case (m, (d, (lo, hi))) =>
-      m.where(col(s"max_$d") >= lo && col(s"min_$d") <= hi)
-    }
 }

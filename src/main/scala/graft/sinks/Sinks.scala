@@ -14,18 +14,21 @@ import graft.cdc.ApplyChanges
   * The reference's destination is a Postgres table mutated per message
   * (consumer.py:60-91, autocommit per statement). Spark's JDBC writer
   * can only append/overwrite, so upsert semantics live here: a
-  * snapshot store that applies a reduced change batch via the merge
-  * operator, and a plain-JDBC upsert for real databases. Both are
-  * idempotent per batch, which upgrades the reference's at-least-once
-  * loss/duplicate windows (SURVEY §2.9) to effectively-exactly-once
-  * under streaming checkpointing.
+  * snapshot store that keeps the latest event per key (deletes as
+  * tombstone rows, which its reads filter out), and a plain-JDBC
+  * upsert for real databases. Both are idempotent per batch, which
+  * upgrades the reference's at-least-once loss/duplicate windows
+  * (SURVEY §2.9) to effectively-exactly-once under streaming
+  * checkpointing; the store also ends in the same state whatever the
+  * batch split or arrival order of the events.
   */
 object Sinks {
 
-  /** D1 surface of the snapshot store: batch merge in, full read out,
-    * D2 totals derived from the stored state (so deletes and updates
-    * retract — SURVEY §7.5 risk 1). A trait so a wrapper (perfbench's
-    * timing store) can stand in for [[ParquetSnapshotStore]]. */
+  /** D1 surface of the snapshot store: batch merge in, visible rows
+    * out, D2 totals derived from the visible state (so deletes and
+    * updates retract — SURVEY §7.5 risk 1). A trait so a wrapper
+    * (perfbench's timing store) can stand in for
+    * [[ParquetSnapshotStore]]. */
   trait SnapshotStore {
     def exists: Boolean
     def load(): Option[DataFrame]
@@ -100,8 +103,12 @@ object Sinks {
     if (!Files.exists(target) && Files.exists(oldOf(target)))
       Files.move(oldOf(target), target, StandardCopyOption.ATOMIC_MOVE)
 
-  /** D1: one parquet dir, rewritten whole every merge, so a merge
-    * costs the snapshot size, not the touched keys.
+  /** D1: one parquet dir holding the latest event per key, rewritten
+    * whole every merge, so a merge costs the snapshot size, not the
+    * touched keys. A key whose latest event is a delete stays as a
+    * tombstone row: a late, older event for it then loses the order
+    * instead of resurrecting it. Tombstones are never dropped (no
+    * retention horizon). [[load]] is the visible view, without them.
     */
   final class ParquetSnapshotStore(spark: SparkSession, path: String, keys: Seq[String])
       extends SnapshotStore {
@@ -113,14 +120,18 @@ object Sinks {
 
     def exists: Boolean = Files.exists(p)
 
-    def load(): Option[DataFrame] =
+    /** Every stored row, tombstones included. */
+    private def stored(): Option[DataFrame] =
       if (!exists) None
       else Some(schema match {
         case Some(s) => spark.read.schema(s).parquet(path)
         case None => spark.read.parquet(path)
       })
 
-    def overwrite(df: DataFrame): Unit = {
+    /** The visible snapshot: stored rows whose action is not a delete. */
+    def load(): Option[DataFrame] = stored().map(ApplyChanges.visible)
+
+    private def overwrite(df: DataFrame): Unit = {
       val tmp = Paths.get(path + ".tmp")
       writeParquet(df, tmp.toString)
       swapInto(p, tmp)
@@ -128,17 +139,17 @@ object Sinks {
     }
 
     /** Apply one micro-batch of change events (any mix of actions,
-      * possibly several per key) to the snapshot.
+      * several per key, in any arrival order, re-sent events included):
+      * store the latest event per key of the stored rows and the batch,
+      * ordered by (`tsCol`, `tieBreak`) — [[ApplyChanges.applyLog]]'s
+      * rule, so the visible snapshot after any split of a log into
+      * batches is `applyLog` over the whole log. One keyed exchange over
+      * the union.
       */
     def merge(changes: DataFrame, tsCol: String, tieBreak: Seq[String] = Nil): Unit = {
       import org.apache.spark.sql.functions.col
-      val reduced = ApplyChanges.latestPerKey(changes, keys, col(tsCol),
-        tieBreak.map(col))
-      val next = load() match {
-        case Some(snap) => ApplyChanges.mergeIntoSnapshot(snap, reduced, keys)
-        case None => reduced.where(org.apache.spark.sql.functions.lower(col("action")) =!= "delete")
-      }
-      overwrite(next)
+      overwrite(ApplyChanges.latestPerKey(stored().fold(changes)(_.unionByName(changes)),
+        keys, col(tsCol), tieBreak.map(col)))
     }
 
     def writeTotals(totalsPath: String, groupCol: String, valueCol: String): Unit = {

@@ -53,48 +53,4 @@ object CdcSources {
       .option("maxFilesPerTrigger", maxFilesPerTrigger) // O2: bounded burst
       .json(dir)
   }
-
-  /** JSONL corpus schema: the document table as newline-delimited JSON
-    * (the interchange format most web-scale corpus dumps actually
-    * arrive in). */
-  val documentsJsonlSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("_corrupt", StringType)))
-
-  /** JSONL corpus reader with corrupt-line quarantine — the corpus-side
-    * analog of the CDC wire codec's P3 semantics: a malformed line
-    * becomes a row whose `_corrupt` column holds the raw text and whose
-    * typed columns are NULL, instead of failing the job or silently
-    * vanishing (PERMISSIVE mode). Callers split on
-    * `_corrupt IS NOT NULL` exactly like the CDC DLQ. A schema is
-    * mandatory: schema inference scans the whole corpus twice — at
-    * 100 TB the inference pass costs more than the read. Spark
-    * restriction: a query touching ONLY `_corrupt` must materialize
-    * the parse first (cache/write) — the DLQ split that reads both
-    * sides does that anyway. */
-  def jsonlDocuments(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema(documentsJsonlSchema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .json(path)
-
-  /** Raw media ingestion for the multimodal path: one row per file
-    * with the payload as a `binary` column (path, modificationTime,
-    * length, content) via Spark's native binaryFile source. Payloads
-    * stay executor-side — the scan feeds `Multimodal`'s batched
-    * decode directly; `spark.sql.files.maxPartitionBytes` sizes the
-    * per-task batch for large blob directories, and the glob filter
-    * prunes by extension BEFORE any bytes are read. (Avro is the one
-    * mainstream format gated here: the sandbox ships Avro core jars
-    * but not the spark-avro datasource — same class of gap as the
-    * Kafka connector, same swap-in story.)
-    */
-  def binaryFiles(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(dir)
 }

@@ -36,15 +36,14 @@ import graft.sinks.Sinks.{SnapshotStore, recoverSwap, writeParquet}
   * a clean batch skips the DLQ write and an all-invalid batch skips
   * the merge.
   *
-  * Scale: with a snapshot in place, one batch plans three shuffle
-  * exchanges (counted in the executed plans): the latest-per-key
-  * window by emp_id inside `store.merge` (pre-reduced map-side by
-  * `WindowGroupLimit`), the snapshot side of the full-outer merge join
-  * by emp_id (the batch side reuses the window's partitioning), and
-  * the totals `groupBy` by emp_city after a map-side partial
-  * aggregate. The first batch has no snapshot to join, so two. DLQ and
-  * corrupt branches are narrow filters over the persisted batch. State
-  * lives in the snapshot store, not the driver.
+  * Scale: one batch plans two shuffle exchanges (counted in the
+  * executed plans), with or without a snapshot in place: the
+  * latest-per-key window by emp_id inside `store.merge`, over the
+  * stored rows and the batch together (pre-reduced map-side by
+  * `WindowGroupLimit`), and the totals `groupBy` by emp_city after a
+  * map-side partial aggregate. DLQ and corrupt branches are narrow
+  * filters over the persisted batch. State lives in the snapshot
+  * store, not the driver.
   */
 object CdcStream {
 

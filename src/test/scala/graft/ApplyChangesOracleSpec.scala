@@ -1,9 +1,11 @@
 package graft
 
+import java.nio.file.Files
 import scala.collection.mutable
 import scala.util.Random
 import org.apache.spark.sql.functions._
 import graft.cdc.ApplyChanges
+import graft.sinks.Sinks.ParquetSnapshotStore
 
 /** Property-style tests: the distributed apply operators must equal a
   * row-at-a-time fold in event order — the reference's execution model
@@ -78,15 +80,49 @@ class ApplyChangesOracleSpec extends SparkSpec {
     }
     val expected = foldOracle(events).map { case (k, e) => k -> e.seq }
     for (nBatches <- Seq(2, 5)) {
-      val batches = events.grouped(math.ceil(events.size.toDouble / nBatches).toInt).toSeq
-      var snap = ApplyChanges.latestPerKey(batches.head.toDF(), Seq("emp_id"), col("seq"))
-        .where(lower(col("action")) =!= "delete")
-      batches.tail.foreach { b =>
-        val reduced = ApplyChanges.latestPerKey(b.toDF(), Seq("emp_id"), col("seq"))
-        snap = ApplyChanges.mergeIntoSnapshot(snap, reduced, Seq("emp_id"))
-      }
-      val got = snap.select("emp_id", "seq").as[(Long, Long)].collect().toMap
+      val store = new ParquetSnapshotStore(spark,
+        Files.createTempDirectory("kbatch").resolve("snap").toString, Seq("emp_id"))
+      events.grouped(math.ceil(events.size.toDouble / nBatches).toInt)
+        .foreach(b => store.merge(b.toDF(), "seq"))
+      val got = store.load().get.select("emp_id", "seq").as[(Long, Long)].collect().toMap
       assert(got === expected, s"nBatches=$nBatches")
+    }
+  }
+
+  test("snapshot store == applyLog over the whole log: any split, arrival order, re-sends") {
+    // the at-least-once producer's contract (producer.py:17-76): batches
+    // arrive in any order and may repeat earlier events, yet the store
+    // must end at "latest event per key wins" over the whole log
+    val rnd = new Random(31)
+    val actions = Seq("insert", "update", "delete", "update")
+    // ts alone ties (three sequence ids per tick); (ts, seq) is total
+    def frame(evs: Seq[Ev]) = evs.toDF()
+      .withColumn("ts", expr("seq div 3"))
+      .withColumn("city", expr("concat('c', emp_id % 4)"))
+    val cols = Seq("emp_id", "seq", "action", "payload", "ts", "city").map(col)
+    for (trial <- 1 to 3) {
+      val events = (0 until 600).map { i =>
+        Ev(rnd.nextInt(40).toLong, i.toLong, actions(rnd.nextInt(actions.size)), rnd.nextLong(1000))
+      }
+      val arrival = rnd.shuffle(events ++ events.filter(_ => rnd.nextInt(5) == 0))
+      val cuts = (Seq(0, arrival.size) ++ Seq.fill(2 + rnd.nextInt(5))(rnd.nextInt(arrival.size)))
+        .distinct.sorted
+      val root = Files.createTempDirectory("storeprop")
+      val store = new ParquetSnapshotStore(spark, root.resolve("snap").toString, Seq("emp_id"))
+      val totals = root.resolve("totals").toString
+      cuts.sliding(2).foreach { case Seq(a, b) =>
+        store.merge(frame(arrival.slice(a, b)), "ts", Seq("seq"))
+        store.writeTotals(totals, "city", "payload")
+      }
+      val want = ApplyChanges.applyLog(frame(events), Seq("emp_id"), col("ts"),
+        tieBreak = Seq(col("seq")))
+      val got = store.load().get.select(cols: _*).collect().map(_.toString).toSet
+      assert(got === want.select(cols: _*).collect().map(_.toString).toSet,
+        s"trial $trial, ${cuts.size - 1} batches")
+      val byCity = want.groupBy("city").agg(sum("payload"), count(lit(1)))
+        .as[(String, Long, Long)].collect().toSet
+      assert(spark.read.parquet(totals).as[(String, Long, Long)].collect().toSet === byCity,
+        s"trial $trial totals")
     }
   }
 
@@ -95,14 +131,6 @@ class ApplyChangesOracleSpec extends SparkSpec {
     val got = ApplyChanges.firstPerKey(events.toDF(), Seq("emp_id"), col("seq"))
       .select("emp_id", "seq").as[(Long, Long)].collect().toMap
     assert(got === Map(1L -> 2L, 2L -> 9L))
-  }
-
-  test("deleteKeys anti-join removes exactly the listed keys") {
-    val snap = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("emp_id", "v")
-    val dels = Seq(Tuple1(2L), Tuple1(99L)).toDF("emp_id")
-    val got = ApplyChanges.deleteKeys(snap, dels, Seq("emp_id"))
-      .select("emp_id").as[Long].collect().toSet
-    assert(got === Set(1L, 3L))
   }
 
   test("time travel at the end of time equals the plain apply") {

@@ -1,9 +1,11 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.cdc._
+import graft.sinks.Sinks.ParquetSnapshotStore
 
 /** End-to-end replica of the reference DAG's 7-mutation scenario
   * (airflow_dags/project2_dag.py:99-135; FIXTURES.md §1): expected
@@ -48,22 +50,21 @@ class CdcGoldenSpec extends SparkSpec {
     assert(rows.length === 1 && rows.head.getLong(0) === 2L)
   }
 
+  private def store(): ParquetSnapshotStore = new ParquetSnapshotStore(spark,
+    Files.createTempDirectory("golden").resolve("snap").toString, Seq("emp_id"))
+
   test("incremental merge across two batches matches the one-shot fold") {
     val valid = Routing.validateSplit(golden).valid
-    val b1 = valid.where(col("last_updated_at") <= ts(5))
-    val b2 = valid.where(col("last_updated_at") > ts(5))
-    val snap1 = ApplyChanges.latestPerKey(b1, Seq("emp_id"), col("last_updated_at"))
-      .where(lower(col("action")) =!= "delete")
-    val reduced2 = ApplyChanges.latestPerKey(b2, Seq("emp_id"), col("last_updated_at"))
-    val snap2 = ApplyChanges.mergeIntoSnapshot(snap1, reduced2, Seq("emp_id"))
-    val rows = snap2.select("emp_id").as[Long].collect()
-    assert(rows.toSeq === Seq(2L))
+    val s = store()
+    s.merge(valid.where(col("last_updated_at") <= ts(5)), "last_updated_at")
+    s.merge(valid.where(col("last_updated_at") > ts(5)), "last_updated_at")
+    assert(s.load().get.select("emp_id").as[Long].collect().toSeq === Seq(2L))
   }
 
   test("delete of an absent key is a no-op in the merge") {
-    val snap = Seq((2L, "Emma")).toDF("emp_id", "emp_FN")
-    val changes = Seq((99L, "Ghost", "delete")).toDF("emp_id", "emp_FN", "action")
-    val out = ApplyChanges.mergeIntoSnapshot(snap, changes, Seq("emp_id"))
-    assert(out.select("emp_id").as[Long].collect().toSeq === Seq(2L))
+    val s = store()
+    s.merge(Seq((2L, "Emma", "insert", 1L)).toDF("emp_id", "emp_FN", "action", "ts"), "ts")
+    s.merge(Seq((99L, "Ghost", "delete", 2L)).toDF("emp_id", "emp_FN", "action", "ts"), "ts")
+    assert(s.load().get.select("emp_id").as[Long].collect().toSeq === Seq(2L))
   }
 }

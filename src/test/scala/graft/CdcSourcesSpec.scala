@@ -31,29 +31,6 @@ class CdcSourcesSpec extends SparkSpec {
     assert(r.getAs[java.math.BigDecimal]("salary").longValue() === 85000L)
   }
 
-  test("JSONL corpus reader quarantines corrupt lines instead of dropping them") {
-    val dir = Files.createTempDirectory("jsonl").toString
-    Files.write(java.nio.file.Paths.get(s"$dir/docs.jsonl"),
-      ("""{"doc_id": 1, "text": "alpha beta", "lang": "en", "source": "s1"}""" + "\n" +
-       """{"doc_id": 2, "text": "gamma delta", "lang": "de", "source": "s2"}""" + "\n" +
-       """{"doc_id": 3, "text": "truncated...""" + "\n" +
-       """not json at all""" + "\n").getBytes)
-    // cache: Spark disallows corrupt-column-only queries on the raw
-    // scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — materialize the parse
-    val df = CdcSources.jsonlDocuments(spark, s"$dir/docs.jsonl").cache()
-    df.count()
-    val good = df.where(col("_corrupt").isNull)
-    val bad = df.where(col("_corrupt").isNotNull)
-    assert(good.count() === 2)
-    assert(good.select("doc_id").as[Long].collect().toSet === Set(1L, 2L))
-    // both malformed lines survive with their raw text for the DLQ path
-    assert(bad.count() === 2)
-    assert(bad.select("_corrupt").as[String].collect()
-      .forall(s => s.startsWith("{\"doc_id\": 3") || s == "not json at all"))
-    // typed columns NULL on quarantined rows
-    assert(bad.where(col("doc_id").isNotNull).count() === 0)
-  }
-
   test("watermark replay pushes the predicate into the scan (S1/F1)") {
     val dir = Files.createTempDirectory("wm").toString
     val log = Seq(

@@ -195,19 +195,18 @@ class CdcStreamSpec extends SparkSpec {
     assert(store.load().get.count() === n.valid)
   }
 
-  test("a warm applyBatch with DLQ rows, totals and a snapshot runs 7 stages") {
+  test("a warm applyBatch with DLQ rows, totals and a snapshot runs 6 stages") {
     val root = Files.createTempDirectory("cdcstages").toString
     val store = new ParquetSnapshotStore(spark, s"$root/snap", Seq("emp_id"))
     def apply(from: Long, id: Long): Counts = CdcStream.applyBatch(wireBatch(hundred(from)),
       store, s"$root/dlq", Some(s"$root/totals"), id)
     apply(1, 0L)
-    // one routing job, the DLQ write, the merge (window shuffle,
-    // snapshot shuffle, join + write) and totals (shuffle, write). The
-    // three isEmpty probes the routing job replaced ran two stages
-    // each: 12 stages
+    // one routing job, the DLQ write, the merge (one window shuffle
+    // over the stored rows and the batch, window + write) and totals
+    // (shuffle, write)
     val (n, stages) = Capture.stages(spark)(apply(51, 1L))
     assert(n === Counts(corrupt = 0, invalid = 25, valid = 75))
-    assert(stages.size === 7, stages.map(_.name).mkString("stages: ", "; ", ""))
+    assert(stages.size === 6, stages.map(_.name).mkString("stages: ", "; ", ""))
   }
 
   test("wire codec round-trips all fields (P2/P3)") {

@@ -432,18 +432,6 @@ class ExtensionOpsSpec extends SparkSpec {
     assert(b(3L) === b(1L))
   }
 
-  test("saltedSum equals plain grouped sum and is deterministic") {
-    val rnd = new scala.util.Random(5)
-    val df = (0 until 2000).map(i => (s"g${i % 3}", rnd.nextInt(1000).toLong))
-      .toDF("g", "v")
-    def run() = Skew.saltedSum(df, Seq(col("g")), col("v"), salts = 8)
-      .as[(String, Long)].collect().toMap
-    val got = run()
-    val want = df.groupBy($"g").agg(sum($"v")).as[(String, Long)].collect().toMap
-    assert(got === want)
-    assert(got === run()) // deterministic salt → identical re-run
-  }
-
   test("language scores + quality signals compute known values") {
     val d = Seq((1L, "the cat and the dog of a house!!")).toDF("doc_id", "text")
     val q = d.select((col("doc_id") +: Text.qualitySignals(col("text"))): _*).collect().head

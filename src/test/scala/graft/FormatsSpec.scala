@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
-import graft.sources.CdcSources
 
 /** Source-format breadth beyond parquet/CSV/JSON: native ORC with
   * predicate pushdown, and binaryFile ingestion feeding the multimodal
@@ -31,7 +30,7 @@ class FormatsSpec extends SparkSpec {
     Files.write(Paths.get(s"$dir/a.fake"), "payload-one".getBytes)
     Files.write(Paths.get(s"$dir/b.fake"), "payload-two-longer".getBytes)
     Files.write(Paths.get(s"$dir/skip.txt"), "not media".getBytes)
-    val media = CdcSources.binaryFiles(spark, dir, glob = "*.fake")
+    val media = spark.read.format("binaryFile").option("pathGlobFilter", "*.fake").load(dir)
     // extension pruned before read; schema is the binaryFile contract
     assert(media.count() === 2)
     assert(Seq("path", "modificationTime", "length", "content")

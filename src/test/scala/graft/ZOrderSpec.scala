@@ -1,12 +1,9 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.ops.ZOrder
 
-/** Z-order layout: bit interleave correctness, and the actual skip
-  * ratio a manifest-driven planner gets from a written z-clustered
-  * layout versus an unclustered one. */
+/** Z-order key: bit interleave correctness, and the DuckDB mirror. */
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
 
@@ -41,45 +38,5 @@ class ZOrderSpec extends SparkSpec {
     val a = Seq((5L, 3L)).toDF("a", "b")
     val viaN = a.select(ZOrder.zValueN(Seq(col("a"), col("b")), 3).as("z")).as[Long].head()
     assert(viaN === 27L)
-  }
-
-  test("z layout confines a 2-d box to few files; unclustered layout reads all") {
-    val base = Files.createTempDirectory("graft-zorder")
-    val zdir = base.resolve("z").toString
-    val rdir = base.resolve("r").toString
-    try {
-      val ev = Tables.events(spark, "/root/testdata/sf0.001")
-        .select(hour(col("ts")).cast("long").as("h"),
-          pmod(col("user_id"), lit(256)).cast("long").as("u"))
-      ZOrder.layout(ev, col("h"), col("u"), 16, 8).write.parquet(zdir)
-      ev.repartition(16).write.parquet(rdir)
-
-      val dims = Seq("h", "u")
-      val zman = ZOrder.manifest(spark.read.parquet(zdir), dims).cache()
-      val rman = ZOrder.manifest(spark.read.parquet(rdir), dims).cache()
-      // sf0.001 ranges: h in 0..23, u = user_id in 0..14 — a quarter-
-      // by-quarter box
-      val box = Map("h" -> (4L, 7L), "u" -> (4L, 7L))
-      val (zTotal, rTotal) = (zman.count(), rman.count())
-      val zHit = ZOrder.filesForBox(zman, box).count()
-      val rHit = ZOrder.filesForBox(rman, box).count()
-      // unclustered: rows are spread uniformly, every file's box spans
-      // the whole space; z-clustered: the box touches a small fraction
-      assert(rHit >= rTotal - 1, s"unclustered should read ~all: $rHit/$rTotal")
-      assert(zHit * 2 <= zTotal, s"z layout should skip >=half: $zHit/$zTotal")
-
-      // pruning is CORRECT: scanning only the manifest-selected files
-      // returns exactly the box's rows
-      val files = ZOrder.filesForBox(zman, box)
-        .select("_file").as[String].collect().toSeq
-      val pred = col("h").between(4, 7) && col("u").between(4, 7)
-      val pruned = spark.read.parquet(files: _*).where(pred).count()
-      val full = spark.read.parquet(zdir).where(pred).count()
-      assert(pruned === full && full > 0)
-      zman.unpersist(); rman.unpersist()
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(base.toFile).deleteRecursively()
-    }
   }
 }
